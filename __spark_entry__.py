@@ -140,7 +140,8 @@ def q_j1_perfect_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_j2_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 — containment partial match, score = length ratio
     (ranking.py:363-397)."""
-    from t_res_spark.operators.ranking import partial_match
+    from t_res_spark.functions.similarity import containment_score
+    from t_res_spark.operators.ranking import match_surfaces, pairwise
 
     _register(spark, sf_dir)
     queries = spark.sql("SELECT DISTINCT lower(n_name) AS mention FROM nation")
@@ -152,9 +153,9 @@ def q_j2_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM nation
         """
     )
-    return partial_match(queries, gaz, damlev=False, use_blocking=False).select(
-        "mention", "variation", "score"
-    )
+    return match_surfaces(
+        queries, gaz, pairwise(containment_score), use_blocking=False
+    ).select("mention", "variation", "score")
 
 
 def q_j3_fuzzy_damlev(spark: SparkSession, sf_dir: str) -> DataFrame:

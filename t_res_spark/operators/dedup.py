@@ -218,7 +218,8 @@ def minhash_lsh_pairs(
     bands: int = 16,
     rows_per_band: int = 4,
     bucket_cap: int = 50,
-    estimate_threshold: float | None = None,
+    *,
+    estimate_threshold: float,
 ) -> DataFrame:
     """Band the signatures, bucket, emit candidate (a, b) pairs.
 
@@ -226,14 +227,14 @@ def minhash_lsh_pairs(
     or near-exact duplicate families — the cheap exact pass catches
     them; pairing them is O(n²) for no information).
 
-    ``estimate_threshold``: when set, the signature-estimate pre-filter
-    is FUSED into the bucket aggregation — the full (doc_id, sig)
+    ``estimate_threshold``: the signature-estimate pre-filter is FUSED
+    into the bucket aggregation — the full (doc_id, sig)
     structs ride the one banding shuffle, pairs are born inside the
     bucket row with their estimate already computed (an in-array
     zip_with/aggregate over the two signatures), and only (a, b)
     survivors of ``estimate >= threshold - 2/sqrt(num_hashes)`` are
-    exploded. Compared to the unfused plan
-    (pairs → join sigs → join sigs → filter) this removes two
+    exploded. Compared to filtering bare pairs afterwards
+    (pairs → join sigs → join sigs → filter) this saves two
     signature joins — i.e. two shuffles of every candidate pair —
     at the cost of cap-bounded O(k²·num_hashes) comparisons per
     bucket done where the data already lives.
@@ -243,13 +244,6 @@ def minhash_lsh_pairs(
     to under-cap buckets BEFORE the collect aggregation — an over-cap
     bucket (a large exact-dup family) never materializes a signature
     array in any agg buffer (~512 B/doc × family size otherwise)."""
-    if estimate_threshold is None:
-        banded = signatures.select(
-            "doc_id",
-            F.posexplode(_band_hashes(bands, rows_per_band)).alias("band", "bucket"),
-        )
-        return _bucket_pairs(banded, ["band", "bucket"], bucket_cap)
-
     band_arr = _band_hashes(bands, rows_per_band)
     # ids-only pre-count: recomputing the band hashes is cheap codegen;
     # shuffling ids instead of (doc_id, sig) structs is 64x lighter
@@ -345,38 +339,6 @@ def jaccard_verify(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-
-
-def signature_estimate_filter(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    threshold: float,
-    margin: float | None = None,
-) -> DataFrame:
-    """Pre-filter candidate pairs by the MinHash Jaccard ESTIMATE
-    (fraction of matching signature positions) before the exact verify.
-
-    The estimate is free — the signatures already exist and are ~512 B
-    per row vs. full shingle arrays (KBs) — so only pairs whose estimate
-    clears ``threshold - margin`` pay the shingle-array shuffle of
-    ``jaccard_verify``. ``margin=None`` derives 2/sqrt(num_hashes) from
-    the actual signature length (≈4 std errors of the estimator), so
-    recall holds whether callers use 64 hashes or 16."""
-    sa = signatures.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
-    sb = signatures.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.greatest(F.size("sig_a"), F.lit(1))
-    joined = pairs.join(sa, "a").join(sb, "b").withColumn("est_jaccard", est)
-    if margin is None:
-        cut = F.lit(threshold) - F.lit(2.0) / F.sqrt(
-            F.greatest(F.size("sig_a"), F.lit(1)).cast("double")
-        )
-    else:
-        cut = F.lit(threshold - margin)
-    return joined.filter(F.col("est_jaccard") >= cut).select("a", "b")
 
 
 def near_duplicate_clusters(

@@ -1,28 +1,36 @@
 """Stage 3 — candidate ranking (the reference's Ranker re-expressed).
 
-Method map (reference dispatch: /root/reference/geoparser/ranking.py:609-617):
+The reference's Ranker is one loop with several string measures
+(dispatch: T-Res ``geoparser/ranking.py:609-617``); here it is one plan,
+``match_surfaces``:
 
-- ``perfect_match`` (ranking.py:286-325): broadcast hash equi-join of
-  distinct mention surfaces against the alias table; match score 1.0.
-- ``partial_match`` containment (ranking.py:363-397): blocked theta
-  join with a native `instr` predicate, score = length ratio.
-- ``partial_match`` damlev (ranking.py:327-361): blocked pair space +
-  Arrow-batched pandas UDF computing normalized Damerau-Levenshtein;
-  keep-all-ties top-1 via dense_rank (ranking.py:456-465 semantics).
-- ``deezy-analog`` (ranking.py:471-568): the DeezyMatch GRU + faiss ANN
-  stage becomes hashed char-n-gram embeddings + **native column-math
-  cosine** (embeddings are unit vectors, so dot == cosine; computed with
-  zip_with/aggregate — whole-stage-codegen, no UDF) over the blocked
-  pair space, threshold + top-k per query (W7).
+1. exact hits — equi-join of the distinct mention surfaces against the
+   alias surfaces, score 1.0 (``perfect_match``, ranking.py:286-325);
+2. the surfaces that missed (left-anti join) are paired with the alias
+   surfaces that share a block key (``blocking``; salted for hot keys);
+3. a score step adds ``score`` to every pair;
+4. a keep rule picks rows per surface — every tie of the best score
+   (ranking.py:456-465), or threshold + top-k by (score desc,
+   variation asc);
+5. the kept rows are unioned with the exact hits.
 
-All methods share:
-- query dedup before scoring (ranking.py:674 / pipeline.py:682) —
-  scoring cost scales with |distinct surfaces|, not |mention instances|;
-- alias noise filtering pushed to the scan (ranking.py:216-247);
-- variation→QID resolution join (ranking.py:679-705) producing the
-  exploded candidate rows (mention, variation, score, qid, relv, abs_relv);
-- a persisted candidate-cache anti-join hook (ranking.py:315-316) — see
-  ``plans.pipeline`` (J12; doubles as the resumability checkpoint).
+``find_candidates`` maps each method to a (score step, keep rule):
+
+- ``perfectmatch``: no score step — exact hits only;
+- ``partialmatch``: containment length ratio (ranking.py:363-397), ties;
+- ``levenshtein``: normalized Damerau-Levenshtein (ranking.py:327-361)
+  in an Arrow-batched pandas UDF, ties;
+- ``fuzzy`` (engine default) / ``jarowinkler``: the same UDF shape with
+  DL / Jaro-Winkler, threshold + top-k;
+- ``embcosine``: the DeezyMatch analog (ranking.py:471-568) — hashed
+  char-n-gram embeddings joined to both sides, native column-math
+  cosine (unit vectors, so dot == cosine), threshold + top-k.
+
+All methods share query dedup before scoring (ranking.py:674), so the
+cost scales with |distinct surfaces|; the alias noise filter pushed to
+the scan (ranking.py:216-247); and the variation → QID resolution join
+(ranking.py:679-705). The persisted candidate-cache anti-join hook
+(ranking.py:315-316) lives in ``plans.pipeline``.
 
 Output contract: candidates(mention, variation, score, qid, relv, abs_relv).
 """
@@ -35,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..datagen import EMB_DIM, hashed_ngram_embedding
 from ..functions.similarity import (
     containment_score,
     damlev_sim_batch,
@@ -59,6 +68,11 @@ def dl_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 @pandas_udf(T.DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return jaro_winkler_batch(a, b)
+
+
+@pandas_udf(T.ArrayType(T.FloatType()))
+def embed_udf(s: pd.Series) -> pd.Series:
+    return s.astype(str).map(lambda x: hashed_ngram_embedding(x, EMB_DIM).tolist())
 
 
 @pandas_udf(T.DoubleType())
@@ -164,52 +178,12 @@ def _blocked_pairs(
     return pairs.select("mention", "variation").distinct()
 
 
-def partial_match(
-    queries: DataFrame,
-    aliases: DataFrame,
-    damlev: bool,
-    salt_factor: int = 8,
-    use_blocking: bool = True,
-) -> DataFrame:
-    """J2/J3 — containment or Damerau-Levenshtein partial match with the
-    reference's keep-all-ties top-1 (ranking.py:399-469).
-
-    Semantics: surfaces that perfect-match are returned with score 1.0
-    and skip fuzzy scoring (the reference's `remainers` logic,
-    ranking.py:441-444); every other surface is scored against the
-    blocked alias space and keeps only its best distinct score
-    (ties all kept — dense_rank == 1 reproduces `[:1]` of sorted unique
-    scores, ranking.py:456-465).
-
-    ``use_blocking=False`` reproduces the reference's unblocked full
-    scan for small KBs (parity testing only — never at scale).
-    """
-    exact = perfect_match(queries, aliases)
-    missed = queries.join(exact.select("mention"), "mention", "left_anti")
-
-    if use_blocking:
-        pairs = _blocked_pairs(missed, aliases, salt_factor)
-    else:
-        pairs = missed.crossJoin(
-            aliases.select(F.col("alias").alias("variation")).distinct()
-        )
-
-    if damlev:
-        scored = pairs.withColumn(
-            "score", damlev_sim_udf(F.col("mention"), F.col("variation"))
-        )
-    else:
-        scored = pairs.withColumn(
-            "score", containment_score(F.col("mention"), F.col("variation"))
-        ).filter(F.col("score").isNotNull())
-
-    w = Window.partitionBy("mention").orderBy(F.desc("score"))
-    top1 = (
-        scored.withColumn("rnk", F.dense_rank().over(w))
-        .filter(F.col("rnk") == 1)
-        .drop("rnk")
+def pairwise(score_fn):
+    """Score step from a (mention, variation) → score column function:
+    ``containment_score`` or an Arrow-batched pandas UDF."""
+    return lambda pairs: pairs.withColumn(
+        "score", score_fn(F.col("mention"), F.col("variation"))
     )
-    return exact.unionByName(top1.select("mention", "variation", "score"))
 
 
 def cosine_score(emb_a, emb_b):
@@ -223,56 +197,89 @@ def cosine_score(emb_a, emb_b):
     )
 
 
-def embedding_match(
+def embedding_cosine(embeddings_kb: DataFrame):
+    """Score step of the DeezyMatch analog (ranking.py:471-568): cosine
+    of hashed n-gram embeddings, the reference's ``1 - dist`` cosine
+    branch (ranking.py:558-562).
+
+    Query-side embeddings are computed once per distinct mention with
+    the encoder used for the KB (datagen.hashed_ngram_embedding) in an
+    Arrow-batched UDF; KB-side embeddings come from ``embeddings_kb``
+    (key, emb) by equi-join, not point queries (S6). No broadcast hint
+    on the query side: on OCR-noisy corpora most surfaces miss the exact
+    match, so it grows with the corpus and AQE decides."""
+
+    def score(pairs: DataFrame) -> DataFrame:
+        q_emb = pairs.select("mention").distinct().withColumn(
+            "q_emb", embed_udf("mention")
+        )
+        kb = embeddings_kb.select(
+            F.col("key").alias("variation"), F.col("emb").alias("v_emb")
+        )
+        return (
+            pairs.join(q_emb, "mention")
+            .join(kb, "variation", "inner")
+            .withColumn("score", cosine_score(F.col("q_emb"), F.col("v_emb")))
+        )
+
+    return score
+
+
+def match_surfaces(
     queries: DataFrame,
     aliases: DataFrame,
-    embeddings_kb: DataFrame,
-    threshold: float = 0.75,
-    top_k: int = 3,
+    score=None,
+    keep: tuple[float, int] | None = None,
     salt_factor: int = 8,
+    use_blocking: bool = True,
 ) -> DataFrame:
-    """J4 — the DeezyMatch-analog ANN join (ranking.py:471-568).
+    """The Ranker loop (ranking.py:399-469, 471-568): exact hits, then
+    fuzzy scoring of every surface that missed → (mention, variation,
+    score).
 
-    Query surfaces missing an exact match are compared to blocked alias
-    candidates by embedding cosine; ``score = cosine`` (the reference's
-    ``1 - dist`` cosine branch, ranking.py:558-562), thresholded and
-    top-k'd per query with deterministic (score desc, variation asc)
-    tie-break.
+    Surfaces that perfect-match are returned with score 1.0 and skip
+    fuzzy scoring (the reference's `remainers`, ranking.py:441-444).
+    ``score`` (pairs(mention, variation) → pairs + ``score``) rates the
+    blocked alias space of every other surface; ``score=None`` stops
+    after the exact pass. A NULL score is no match. ``keep`` picks the
+    rows per surface:
 
-    Query-side embeddings are computed on the fly with the same hashed
-    n-gram encoder used for the KB (datagen.hashed_ngram_embedding) via
-    an Arrow-batched UDF; KB-side embeddings come from the embeddings
-    table (equi-join, not point queries — S6)."""
-    from ..datagen import EMB_DIM, hashed_ngram_embedding
+    - ``None``: every tie of the best score — dense_rank == 1 reproduces
+      ``[:1]`` of the sorted unique scores (ranking.py:456-465);
+    - ``(threshold, top_k)``: scores >= threshold, the first ``top_k``
+      by (score desc, variation asc).
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
-    def embed_udf(s: pd.Series) -> pd.Series:
-        return s.astype(str).map(lambda x: hashed_ngram_embedding(x, EMB_DIM).tolist())
-
+    ``use_blocking=False`` scores the full unblocked pair space, as the
+    reference does; containment pairs rarely share a block key, so
+    oracle parity on small KBs needs it (never at scale)."""
     exact = perfect_match(queries, aliases)
+    if score is None:
+        return exact
     missed = queries.join(exact.select("mention"), "mention", "left_anti")
-    pairs = _blocked_pairs(missed, aliases, salt_factor)
 
-    q_emb = missed.select("mention").withColumn("q_emb", embed_udf("mention"))
-    kb = embeddings_kb.select(
-        F.col("key").alias("variation"), F.col("emb").alias("v_emb")
-    )
-    # No broadcast hint on q_emb: on OCR-noisy corpora most surfaces
-    # miss the exact match, so this side grows with the corpus — AQE
-    # promotes it to broadcast only when actually small.
-    scored = (
-        pairs.join(q_emb, "mention")
-        .join(kb, "variation", "inner")
-        .withColumn("score", cosine_score(F.col("q_emb"), F.col("v_emb")))
-        .filter(F.col("score") >= F.lit(threshold))
-    )
-    w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
+    if use_blocking:
+        pairs = _blocked_pairs(missed, aliases, salt_factor)
+    else:
+        pairs = missed.crossJoin(
+            aliases.select(F.col("alias").alias("variation")).distinct()
+        )
+    scored = score(pairs)
+
+    if keep is None:
+        scored = scored.filter(F.col("score").isNotNull())
+        rank, limit = F.dense_rank(), 1
+        w = Window.partitionBy("mention").orderBy(F.desc("score"))
+    else:
+        threshold, limit = keep
+        scored = scored.filter(F.col("score") >= F.lit(threshold))
+        rank = F.row_number()
+        w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
+    kept = (
+        scored.withColumn("rn", rank.over(w))
+        .filter(F.col("rn") <= limit)
         .select("mention", "variation", "score")
     )
-    return exact.unionByName(topk)
+    return exact.unionByName(kept)
 
 
 def resolve_candidates(matches: DataFrame, aliases: DataFrame) -> DataFrame:
@@ -287,32 +294,6 @@ def resolve_candidates(matches: DataFrame, aliases: DataFrame) -> DataFrame:
     ).select("mention", "variation", "score", "qid", "relv", "abs_relv")
 
 
-def _blocked_udf_match(
-    queries: DataFrame,
-    aliases: DataFrame,
-    score_udf,
-    threshold: float,
-    top_k: int,
-    salt_factor: int,
-) -> DataFrame:
-    """Shared shape of the UDF-scored methods: exact short-circuit +
-    blocked pair space + Arrow-batched score + threshold + deterministic
-    top-k per query surface."""
-    exact = perfect_match(queries, aliases)
-    missed = queries.join(exact.select("mention"), "mention", "left_anti")
-    pairs = _blocked_pairs(missed, aliases, salt_factor)
-    scored = pairs.withColumn(
-        "score", score_udf(F.col("mention"), F.col("variation"))
-    ).filter(F.col("score") >= F.lit(threshold))
-    w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("mention", "variation", "score")
-    )
-    return exact.unionByName(topk)
-
-
 def find_candidates(
     queries: DataFrame,
     aliases: DataFrame,
@@ -324,34 +305,26 @@ def find_candidates(
 ) -> DataFrame:
     """Method dispatch (ranking.py:609-617 analog) → resolved candidates.
 
-    ``fuzzy`` (the engine default; DeezyMatch role): exact short-circuit
-    + blocked Damerau-Levenshtein with threshold + top-k — the string
-    measure the north star names, cheap enough without an ANN model.
-    ``jarowinkler``: same shape with the Jaro-Winkler measure (the other
-    measure the north star names; reference ANN role,
-    /root/reference/geoparser/ranking.py:471-568). JW thresholds run
-    higher than DL — 0.85+ is typical for OCR variants.
+    Every method runs ``match_surfaces`` over the noise-filtered aliases
+    (see the module docstring for the per-method score step and keep
+    rule). ``threshold``/``top_k`` apply to ``fuzzy``, ``jarowinkler``
+    and ``embcosine``; JW thresholds run higher than DL — 0.85+ is
+    typical for OCR variants. ``embcosine`` needs ``embeddings_kb``.
     """
-    aliases = clean_aliases(aliases)
-    if method == "perfectmatch":
-        matches = perfect_match(queries, aliases)
-    elif method == "partialmatch":
-        matches = partial_match(queries, aliases, damlev=False, salt_factor=salt_factor)
-    elif method == "levenshtein":
-        matches = partial_match(queries, aliases, damlev=True, salt_factor=salt_factor)
-    elif method == "embcosine":
-        assert embeddings_kb is not None
-        matches = embedding_match(
-            queries, aliases, embeddings_kb, threshold, top_k, salt_factor
-        )
-    elif method == "fuzzy":
-        matches = _blocked_udf_match(
-            queries, aliases, damlev_sim_udf, threshold, top_k, salt_factor
-        )
-    elif method == "jarowinkler":
-        matches = _blocked_udf_match(
-            queries, aliases, jaro_winkler_udf, threshold, top_k, salt_factor
-        )
-    else:
+    if method == "embcosine" and embeddings_kb is None:
+        raise ValueError("method 'embcosine' needs embeddings_kb")
+    top = (threshold, top_k)
+    methods = {  # method: (score step, keep rule)
+        "perfectmatch": (None, None),
+        "partialmatch": (pairwise(containment_score), None),
+        "levenshtein": (pairwise(damlev_sim_udf), None),
+        "embcosine": (embedding_cosine(embeddings_kb), top),
+        "fuzzy": (pairwise(damlev_sim_udf), top),
+        "jarowinkler": (pairwise(jaro_winkler_udf), top),
+    }
+    if method not in methods:
         raise ValueError(f"unknown ranking method: {method}")
+    score, keep = methods[method]
+    aliases = clean_aliases(aliases)
+    matches = match_surfaces(queries, aliases, score, keep, salt_factor)
     return resolve_candidates(matches, aliases)

@@ -122,6 +122,24 @@ def srp_bucket(vec_col, planes: list[list[float]]):
     return bucket
 
 
+def _dim_wide_rows(batch, dim: int):
+    """(ids, (k, dim) vectors) of the (id, vector) Arrow batch's rows
+    whose vector is non-null and exactly ``dim`` wide.
+
+    The check reads list lengths off the Arrow offsets before anything
+    is reshaped: a null vector would break the flat reshape, and two
+    ragged rows whose widths sum to 2·dim would reshape silently
+    misaligned. Rows that fail it get no bucket or cell, so they never
+    become candidates."""
+    import pyarrow.compute as pc
+
+    vecs = batch.column(1)
+    ok = pc.fill_null(pc.equal(pc.list_value_length(vecs), dim), False)
+    ids = batch.column(0).filter(ok).to_numpy(zero_copy_only=False)
+    flat = vecs.filter(ok).flatten().to_numpy(zero_copy_only=False)
+    return ids, flat.reshape(len(ids), dim)
+
+
 def srp_buckets_arrow(
     df: DataFrame,
     id_col: str,
@@ -161,12 +179,10 @@ def srp_buckets_arrow(
 
     def fn(batches):
         for batch in batches:
-            n = batch.num_rows
+            ids, v = _dim_wide_rows(batch, dim)
+            n = len(ids)
             if n == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            v = flat.reshape(n, dim)
             signs = (v @ P.T) > 0  # (n, tables*bits)
             buckets = signs.reshape(n, tables, bits) @ pow2  # (n, tables)
             yield pa.RecordBatch.from_arrays(
@@ -200,12 +216,9 @@ def ivf_cells_arrow(
 
     def fn(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            ids, v = _dim_wide_rows(batch, dim)
+            if len(ids) == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            v = flat.reshape(n, dim)
             cell = np.argmax(v @ C.T, axis=1).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids), pa.array(cell)], names=[id_col, "cell"]

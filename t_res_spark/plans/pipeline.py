@@ -109,8 +109,6 @@ class PipelineConfig:
     (pipeline.py:95-106 defaults: perfectmatch + mostpopular; our
     default is the fuzzy DeezyMatch-analog ranker)."""
 
-    # extra keys: 'bucketed_stage_prefix' → persist the label-join
-    # inputs bucketed on `mention` (exchange-free resume, VERDICT r4 #8)
     # perfectmatch|partialmatch|levenshtein|embcosine|fuzzy|jarowinkler
     ranking_method: str = "fuzzy"
     linking_method: str = "mostpopular"  # mostpopular|bydistance
@@ -166,61 +164,6 @@ def _drop_scratch(paths: list) -> None:
             _LIVE_SCRATCH.remove((path, remover))
         except ValueError:
             pass
-
-
-def persist_bucketed_stages(
-    spark: SparkSession,
-    mentions: DataFrame,
-    predictions: DataFrame,
-    table_prefix: str,
-    num_buckets: int = 32,
-) -> tuple[DataFrame, DataFrame]:
-    """SCALE.md stage-5 alternative (VERDICT r4 #8): persist the two
-    label-join inputs bucketed (and bucket-sorted) on ``mention`` so a
-    RESUMED session joins them with no Exchange and no Sort on either
-    side. At target scale the mention-instance table is the widest
-    thing the pipeline touches; when the per-surface predictions table
-    outgrows broadcast range this turns the label join from a
-    two-sided instance shuffle into a bucket-local merge. Returns the
-    bucket-backed reads."""
-    from ..sources.tables import write_bucketed
-
-    write_bucketed(
-        mentions, f"{table_prefix}_mentions", ["mention"],
-        num_buckets=num_buckets, sort_cols=["mention"],
-    )
-    write_bucketed(
-        predictions, f"{table_prefix}_predictions", ["mention"],
-        num_buckets=num_buckets, sort_cols=["mention"],
-    )
-    return (
-        spark.table(f"{table_prefix}_mentions"),
-        spark.table(f"{table_prefix}_predictions"),
-    )
-
-
-def resume_from_bucketed(
-    spark: SparkSession,
-    table_prefix: str,
-    entities: DataFrame | None = None,
-) -> PipelineResult:
-    """Resume the tail of the pipeline (label join → clusters →
-    metrics) from bucketed stage tables written by a prior
-    ``resolve(..., config=PipelineConfig(extra={'bucketed_stage_prefix':
-    …}))`` run — the link join is exchange-free by bucketing (plan
-    test: test_pipeline_e2e::test_bucketed_resume_no_exchange)."""
-    mentions = spark.table(f"{table_prefix}_mentions")
-    predictions = spark.table(f"{table_prefix}_predictions")
-    linked = linking.link_mentions(mentions, predictions, entities)
-    clusters = clustering.cluster_mentions(linked)
-    return PipelineResult(
-        mentions=mentions,
-        candidates=predictions,
-        predictions=predictions,
-        linked=linked,
-        clusters=clusters,
-        metrics=stage_metrics(spark, clusters),
-    )
 
 
 def blocking_metrics(surfaces: DataFrame) -> DataFrame:
@@ -389,26 +332,6 @@ def _resolve_stages(
         predictions = _materialize_small(_predict(), "predictions")
     else:
         predictions = _stage("predictions", _predict)
-
-    # Opt-in bucketed persistence of the label-join inputs (VERDICT r4
-    # #8): both sides land bucketed+sorted on `mention`, so THIS run's
-    # label join and any `resume_from_bucketed` session run it with no
-    # Exchange/Sort on either side.
-    bucket_prefix = cfg.extra.get("bucketed_stage_prefix")
-    if bucket_prefix:
-        cached_mentions = mentions
-        mentions, predictions = persist_bucketed_stages(
-            spark, mentions, predictions, bucket_prefix
-        )
-        # the bucketed write just consumed the persisted mentions
-        # stage and everything downstream (label join, result fields)
-        # reads the bucket-backed tables — release the cache NOW;
-        # deferring to PipelineResult.unpersist() would leak it, since
-        # that handle now points at the bucket read
-        try:
-            cached_mentions.unpersist()
-        except Exception:
-            pass
 
     # linked is NOT persisted: it re-derives from the cached mentions
     # with one cheap broadcast join per consuming branch, while caching

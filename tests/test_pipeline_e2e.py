@@ -102,49 +102,3 @@ def test_config_dispatch_all_ranking_methods(spark, tiny_dir):
             # must agree on (exact match short-circuits identically)
             for k, v in base.items():
                 assert got.get(k) == v, (method, k, v, got.get(k))
-
-
-def test_bucketed_resume_no_exchange(spark, tiny_fx, tiny_dir, tmp_path):
-    """VERDICT r4 #8 — opt-in bucketed stage persistence: a resolve()
-    run with `bucketed_stage_prefix` persists mentions+predictions
-    bucketed on `mention`; a resumed session's label join runs with
-    ZERO Exchange on either side even with broadcast disabled (the
-    at-scale regime where predictions outgrow broadcast range), and
-    the clusters equal the unbucketed run's."""
-    from t_res_spark.plans.pipeline import resume_from_bucketed
-    from t_res_spark.sources.tables import read_fixture
-
-    spark.sql("DROP TABLE IF EXISTS tres_bkt_mentions")
-    spark.sql("DROP TABLE IF EXISTS tres_bkt_predictions")
-    transcripts = read_fixture(spark, tiny_dir, "transcripts")
-    aliases = read_fixture(spark, tiny_dir, "aliases")
-    base = resolve(spark, transcripts, aliases, config=PipelineConfig())
-    want = sorted(
-        map(tuple, base.clusters.select("mention_id", "cluster_id").collect())
-    )
-    res = resolve(
-        spark, transcripts, aliases,
-        config=PipelineConfig(extra={"bucketed_stage_prefix": "tres_bkt"}),
-    )
-    got = sorted(
-        map(tuple, res.clusters.select("mention_id", "cluster_id").collect())
-    )
-    assert got == want
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the SMJ regime: with bucketed+sorted tables the join
-        # must still need no shuffle and no sort
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        resumed = resume_from_bucketed(spark, "tres_bkt")
-        plan = resumed.linked._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        rgot = sorted(
-            map(tuple, resumed.clusters.select("mention_id", "cluster_id").collect())
-        )
-        assert rgot == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        base.unpersist()
-        res.unpersist()

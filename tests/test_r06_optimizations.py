@@ -71,6 +71,55 @@ def test_ivf_cells_arrow_matches_jvm_argmax(spark):
     assert j == a
 
 
+def test_arrow_buckets_and_cells_skip_null_and_ragged_vectors(spark):
+    """A null vector and a 63- and a 65-wide one (widths summing to
+    2·dim, so a flat reshape would misalign them silently) beside valid
+    64-wide rows, all in one Arrow batch: the valid rows get the JVM
+    references' buckets and cells, the bad rows get none."""
+    from t_res_spark.operators.similarity_search import (
+        _hyperplanes,
+        ivf_cell,
+        ivf_cells_arrow,
+        srp_bucket,
+        srp_buckets_arrow,
+    )
+
+    rng = np.random.RandomState(5)
+    good = [(i, [float(x) for x in rng.normal(size=64)]) for i in range(20)]
+    bad = [
+        (100, None),
+        (101, [float(x) for x in rng.normal(size=63)]),
+        (102, [float(x) for x in rng.normal(size=65)]),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    vecs = spark.createDataFrame(good[:10] + bad + good[10:], schema).coalesce(1)
+    valid = spark.createDataFrame(good, schema)
+
+    planes = [_hyperplanes(64, 6, seed=42 + t) for t in range(3)]
+    jvm = valid.select(
+        "vec_id",
+        F.posexplode(
+            F.array(*[srp_bucket(F.col("embedding"), p) for p in planes])
+        ).alias("table_id", "bucket"),
+    )
+    arrow = srp_buckets_arrow(vecs, "vec_id", "embedding", planes)
+    j = {(r["vec_id"], r["table_id"]): r["bucket"] for r in jvm.collect()}
+    a = {(r["vec_id"], r["table_id"]): r["bucket"] for r in arrow.collect()}
+    assert j == a and len(a) == 20 * 3
+
+    cents = _hyperplanes(64, 5, seed=11)
+    jvm = valid.select(
+        "vec_id", ivf_cell(F.col("embedding"), cents).alias("cs")
+    ).select(
+        "vec_id",
+        (F.array_position(F.col("cs"), F.array_max("cs")) - 1).alias("cell"),
+    )
+    arrow = ivf_cells_arrow(vecs, "vec_id", "embedding", cents)
+    j = {r["vec_id"]: r["cell"] for r in jvm.collect()}
+    a = {r["vec_id"]: r["cell"] for r in arrow.collect()}
+    assert j == a and len(a) == 20
+
+
 def _window_align_spans_reference(pred, gold):
     """The pre-r6 row_number-window implementation, kept verbatim as
     the semantic reference for the min_by rewrite."""

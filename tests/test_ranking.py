@@ -4,6 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from t_res_spark.functions.similarity import containment_score
 from t_res_spark.operators import ranking
 
 
@@ -49,18 +50,18 @@ def test_perfect_match(spark, kb):
 def test_partial_match_containment_golden(spark, kb):
     """tests/test_ranking.py:77-80 — containment('New York',
     'New York City') == 8/13; keep-all-ties top-1."""
-    out = ranking.partial_match(
+    out = ranking.match_surfaces(
         _queries(spark, "York New"),  # not an exact match; contains nothing
         ranking.clean_aliases(kb),
-        damlev=False,
+        ranking.pairwise(containment_score),
         use_blocking=False,
     ).collect()
     assert out == []  # no containment either direction
 
-    out = ranking.partial_match(
+    out = ranking.match_surfaces(
         _queries(spark, "ork Cit"),
         ranking.clean_aliases(kb),
-        damlev=False,
+        ranking.pairwise(containment_score),
         use_blocking=False,
     ).collect()
     # 'ork Cit' ⊂ 'New York City' → 7/13
@@ -72,10 +73,10 @@ def test_partial_match_containment_golden(spark, kb):
 def test_partial_match_damlev_golden(spark, kb):
     """tests/test_ranking.py:55-57 — damlev('Lvndon','London') == 5/6,
     and it is the unique top-1 distinct score."""
-    out = ranking.partial_match(
+    out = ranking.match_surfaces(
         _queries(spark, "Lvndon"),
         ranking.clean_aliases(kb),
-        damlev=True,
+        ranking.pairwise(ranking.damlev_sim_udf),
         use_blocking=False,
     ).collect()
     best = {r["variation"]: r["score"] for r in out}
@@ -110,10 +111,98 @@ def test_embedding_match(spark, kb):
         for a in [r["alias"] for r in kb_clean.select("alias").distinct().collect()]
     ]
     emb = spark.createDataFrame(emb_rows, "key string, emb array<float>")
-    out = ranking.embedding_match(
-        _queries(spark, "Shefiield"), kb_clean, emb, threshold=0.5, top_k=3
+    out = ranking.match_surfaces(
+        _queries(spark, "Shefiield"), kb_clean, ranking.embedding_cosine(emb),
+        keep=(0.5, 3),
     ).collect()
     assert any(r["variation"] == "Sheffield" for r in out)
+
+
+# find_candidates rows per method over the ``kb`` fixture, derived by
+# hand: (mention, variation) → score, resolved to every QID of the
+# variation. Exact hits skip fuzzy scoring; 'SHEFFIELD' misses the
+# case-sensitive exact match but scores 1.0 lowercased; 'Lvndon' shares
+# no block key with 'London' ('llvndn' vs 'llndn'), so no blocked method
+# pairs them; 'Lndn' does share 'p:llndn' and scores DL 1 - 2/6 (under
+# the 0.7 threshold), JW 8/9 + 0.1·1/9 = 9/10.
+_QIDS = {
+    "London": ["Q84", "Q2477346"],
+    "New York": ["Q60"],
+    "Sheffield": ["Q42448"],
+    "Lancaster": ["Q211583"],
+}
+_EXACT = {("London", "London"): 1.0, ("New York", "New York"): 1.0}
+_UPPER = {("SHEFFIELD", "Sheffield"): 1.0}
+_DL = {
+    **_EXACT, **_UPPER,
+    ("Sheffield.", "Sheffield"): 9 / 10,   # one deletion over 10
+    ("Shefiield", "Sheffield"): 8 / 9,     # one substitution over 9
+    ("Lancastor", "Lancaster"): 8 / 9,
+}
+_COSINE = None  # score = cosine of the two hashed n-gram embeddings
+_EXPECTED = {
+    "perfectmatch": _EXACT,
+    # containment: len(shorter) / len(longer), ties of the best
+    "partialmatch": {**_EXACT, **_UPPER, ("Sheffield.", "Sheffield"): 9 / 10},
+    # ties of the best, no threshold: 'Lndn' keeps its 2/3
+    "levenshtein": {**_DL, ("Lndn", "London"): 4 / 6},
+    "fuzzy": _DL,
+    # Jaro 25/27 (8 of 9 matched, no transpositions) + 4-char prefix
+    # boost 0.4 · 2/27 = 43/45; 'sheffield.' Jaro 29/30 → 49/50
+    "jarowinkler": {
+        **_EXACT, **_UPPER,
+        ("Sheffield.", "Sheffield"): 49 / 50,
+        ("Shefiield", "Sheffield"): 43 / 45,
+        ("Lancastor", "Lancaster"): 43 / 45,
+        ("Lndn", "London"): 9 / 10,
+    },
+    "embcosine": {
+        **_EXACT,
+        ("SHEFFIELD", "Sheffield"): _COSINE,
+        ("Sheffield.", "Sheffield"): _COSINE,
+        ("Lancastor", "Lancaster"): _COSINE,
+    },
+}
+
+
+@pytest.mark.parametrize("method", sorted(_EXPECTED))
+def test_find_candidates_methods_table(spark, kb, method):
+    """All six methods through find_candidates (threshold 0.7, top-3)."""
+    import numpy as np
+
+    from t_res_spark.datagen import hashed_ngram_embedding
+
+    clean = ranking.clean_aliases(kb)
+    emb = spark.createDataFrame(
+        [(a, hashed_ngram_embedding(a).tolist())
+         for a in sorted({r["alias"] for r in clean.collect()})],
+        "key string, emb array<float>",
+    )
+    queries = _queries(
+        spark, "London", "New York", "SHEFFIELD", "Sheffield.", "Shefiield",
+        "Lancastor", "Lndn", "Lvndon",
+    )
+    out = ranking.find_candidates(
+        queries, kb, embeddings_kb=emb, method=method, threshold=0.7, top_k=3
+    ).collect()
+    got = {(r["mention"], r["variation"], r["qid"]): r["score"] for r in out}
+    assert len(got) == len(out)
+    want = {
+        (m, v, q): score
+        for (m, v), score in _EXPECTED[method].items()
+        for q in _QIDS[v]
+    }
+    assert set(got) == set(want)
+    for key, score in want.items():
+        if score is _COSINE:
+            m, v, _ = key
+            score = float(np.dot(hashed_ngram_embedding(m).astype(np.float64),
+                                 hashed_ngram_embedding(v).astype(np.float64)))
+        assert got[key] == pytest.approx(score, abs=1e-6), key
+    # resolution carries the alias row's relevance
+    relv = {(k["alias"], k["qid"]): (k["relv"], k["abs_relv"]) for k in kb.collect()}
+    for r in out:
+        assert (r["relv"], r["abs_relv"]) == relv[(r["variation"], r["qid"])]
 
 
 def test_salting_preserves_results(spark, kb):
@@ -125,7 +214,7 @@ def test_salting_preserves_results(spark, kb):
 
 def test_no_forced_broadcast_on_unbounded_sides(spark, kb):
     """Scale guard: neither the alias-surface side of perfect_match nor
-    the query-embedding side of embedding_match may carry a broadcast
+    the query-embedding side of the embcosine score step may carry a broadcast
     hint — both grow with the KB / corpus (10M+ aliases; most surfaces
     miss exact match on OCR-noisy text). AQE is free to promote small
     sides at runtime; what we assert is that the plan doesn't FORCE it."""
@@ -140,7 +229,9 @@ def test_no_forced_broadcast_on_unbounded_sides(spark, kb):
     )
     for df in (
         ranking.perfect_match(queries, aliases),
-        ranking.embedding_match(queries, aliases, emb_kb),
+        ranking.match_surfaces(
+            queries, aliases, ranking.embedding_cosine(emb_kb), keep=(0.75, 3)
+        ),
     ):
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed, analyzed
