@@ -1,9 +1,9 @@
 """Shuffle-shape helpers shared by the Arrow-group operators.
 
 One home for the explicit-N repartition pin so the rationale and the
-edge-case handling live in one place instead of three (context /
-bio / annotations all need it in front of their ``applyInPandas``
-group stages).
+edge-case handling live in one place instead of four (context /
+bio / annotations need it in front of their ``applyInPandas`` group
+stages, ranking in front of its pandas-UDF score step).
 """
 
 from __future__ import annotations

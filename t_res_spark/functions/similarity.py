@@ -1,8 +1,12 @@
 """String- and geo-similarity kernels.
 
-Pure-Python pair kernels (wrapped in Arrow-batched pandas UDFs by the
-ranking operators — never row-at-a-time Python UDFs) plus native Spark
-column expressions for everything Catalyst can codegen.
+Pair kernels for the Arrow-batched pandas UDFs of the ranking operators
+(never row-at-a-time Python UDFs) plus native Spark column expressions
+for everything Catalyst can codegen. The batch kernels take and return
+pandas Series; a NULL on either side scores NULL. OSA, the ranking
+stage's measure, runs a whole batch in numpy lockstep
+(``osa_distance_batch``: Hyyrö's bit-parallel algorithm, ~20-30x the
+per-pair DP); the others call the pure-Python scalar kernels per pair.
 
 Reference parity:
 - normalized Damerau-Levenshtein similarity:
@@ -202,70 +206,159 @@ def fuzz_ratio(s1: str, s2: str) -> float:
 
 
 # ---------------------------------------------------------------------------
+# bit-parallel OSA (a whole batch of pairs in numpy lockstep)
+# ---------------------------------------------------------------------------
+
+_WORD = 64  # bits per row: patterns up to 64 code points
+_PAT_PAD = np.uint32(0xFFFFFFFF)  # pad code points: above U+10FFFF and
+_TXT_PAD = np.uint32(0xFFFFFFFE)  # distinct, so a pad never matches
+
+
+def _code_points(strs: list[str], lens: np.ndarray, pad: np.uint32) -> np.ndarray:
+    """(rows, max len) uint32 code points, ``pad`` past each row's end.
+    Lengths come from ``len()``: numpy's '<U' strips trailing NULs on
+    read-out but keeps them in the buffer."""
+    width = max(int(lens.max(initial=0)), 1)
+    codes = np.array(strs, dtype=f"<U{width}").view(np.uint32)
+    codes = codes.reshape(len(strs), width)
+    codes[np.arange(width) >= lens[:, None]] = pad
+    return codes
+
+
+def _osa_bitparallel(pat: list[str], txt: list[str], lp: np.ndarray,
+                     lt: np.ndarray) -> np.ndarray:
+    """OSA distance of each (pat[i], txt[i]), 1 <= len(pat[i]) <= 64:
+    Hyyrö's bit-vector algorithm (2003, the transposition variant), one
+    uint64 state per row, one vector step per text column. Rows are
+    sorted by text length so a step touches only unfinished rows."""
+    order = np.argsort(-lt, kind="stable")
+    lp, lt = lp[order], lt[order]
+    P = _code_points([pat[i] for i in order], lp, _PAT_PAD)
+    T = _code_points([txt[i] for i in order], lt, _TXT_PAD)
+    n, nbytes = len(order), (P.shape[1] + 7) // 8
+    # rows still running at step j: those with lt > j (lt is descending)
+    active = np.searchsorted(-lt, -np.arange(int(lt.max(initial=0))))
+
+    vp = np.full(n, ~np.uint64(0))
+    vn = np.zeros(n, np.uint64)
+    d0 = np.zeros(n, np.uint64)
+    pm_prev = np.zeros(n, np.uint64)
+    last = np.left_shift(np.uint64(1), (lp - 1).astype(np.uint64))
+    dist = lp.copy()
+    masks = np.zeros((n, 8), np.uint8)  # pattern-match mask bytes, LE
+    for j, k in enumerate(active):
+        masks[:k, :nbytes] = np.packbits(
+            P[:k] == T[:k, j, None], axis=1, bitorder="little")
+        pm = masks[:k].view("<u8")[:, 0]
+        VP, VN = vp[:k], vn[:k]
+        tr = ((~d0[:k] & pm) << 1) & pm_prev[:k]
+        D0 = (((pm & VP) + VP) ^ VP) | pm | VN | tr
+        hp = VN | ~(D0 | VP)
+        hn = D0 & VP
+        dist[:k] += (hp & last[:k]) != 0
+        dist[:k] -= (hn & last[:k]) != 0
+        hp = (hp << 1) | 1
+        hn = hn << 1
+        vp[:k] = hn | ~(D0 | hp)
+        vn[:k] = hp & D0
+        d0[:k] = D0
+        pm_prev[:k] = pm
+    out = np.empty(n, np.int64)
+    out[order] = dist
+    return out
+
+
+def osa_distance_batch(a: list[str], b: list[str]) -> np.ndarray:
+    """``osa_distance`` of every pair (a[i], b[i]) → int64 array.
+
+    OSA is symmetric, so each row's pattern is the side that fits the
+    64-bit word — the longer one when it does (fewer steps). Rows where
+    both sides exceed 64 code points take the per-row DP."""
+    la = np.fromiter(map(len, a), np.int64, len(a))
+    lb = np.fromiter(map(len, b), np.int64, len(b))
+    longest = np.maximum(la, lb)
+    pat_is_a = (la >= lb) == (longest <= _WORD)
+    shortest = np.minimum(la, lb)
+    out = longest.copy()  # the distance when one side is empty
+    dp = shortest > _WORD
+    for i in np.flatnonzero(dp):
+        out[i] = osa_distance(a[i], b[i])
+    rows = np.flatnonzero(~dp & (shortest > 0))
+    pat = [a[i] if pat_is_a[i] else b[i] for i in rows]
+    txt = [b[i] if pat_is_a[i] else a[i] for i in rows]
+    sel = pat_is_a[rows]
+    out[rows] = _osa_bitparallel(pat, txt, np.where(sel, la[rows], lb[rows]),
+                                 np.where(sel, lb[rows], la[rows]))
+    return out
+
+
+# ---------------------------------------------------------------------------
 # batch kernels (pandas Series in/out — used inside pandas UDFs)
 # ---------------------------------------------------------------------------
 
-# rapidfuzz (C++) is used when importable — ~100x the pure-Python DP
-# kernels; the fallbacks compute the *identical integer distances*
-# (OSA / unrestricted DL / Indel), so results are bit-equal either way.
-# Jaro-Winkler deliberately has NO rapidfuzz path: rapidfuzz's JW is the
-# non-greedy variant and would silently change golden values.
+# rapidfuzz (C++) is used when importable for unrestricted DL and Indel;
+# it computes the *identical integer distances* as the pure-Python DPs,
+# so results are bit-equal either way. OSA always runs the bit-parallel
+# numpy kernel above (the same algorithm rapidfuzz uses). Jaro-Winkler
+# deliberately has NO rapidfuzz path: rapidfuzz's JW is the non-greedy
+# variant and would silently change golden values.
 try:  # pragma: no cover - not installed in the sandbox
     from rapidfuzz import fuzz as _rf_fuzz
-    from rapidfuzz.distance import OSA as _rf_osa
     from rapidfuzz.distance import DamerauLevenshtein as _rf_dl
 except ImportError:
-    _rf_fuzz = _rf_osa = _rf_dl = None
+    _rf_fuzz = _rf_dl = None
+
+
+def _pair_batch(a: pd.Series, b: pd.Series, kernel) -> pd.Series:
+    """``kernel(list_a, list_b)`` → float scores over the rows where
+    both sides are non-NULL; a NULL on either side scores NULL."""
+    valid = (a.notna() & b.notna()).to_numpy()
+    out = np.full(len(a), np.nan)
+    if valid.any():
+        out[valid] = kernel(a[valid].tolist(), b[valid].tolist())
+    return pd.Series(out, index=a.index, dtype="float64")
 
 
 def fuzz_ratio_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [fuzz_ratio(x, y) for x, y in zip(a.astype(str), b.astype(str))],
-        index=a.index,
-        dtype="float64",
+    return _pair_batch(
+        a, b, lambda xs, ys: [fuzz_ratio(x, y) for x, y in zip(xs, ys)]
     )
+
+
+def _rf_dl_similarity(s1: str, s2: str) -> float:
+    a, b = s1.lower(), s2.lower()
+    m = max(len(a), len(b))
+    return 1.0 if m == 0 else 1.0 - _rf_dl.distance(a, b) / m
 
 
 def dl_sim_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     """Unrestricted-DL similarity batch (DuckDB-exact), rapidfuzz-
     accelerated when available."""
-    if _rf_dl is not None:
-        out = []
-        for x, y in zip(a.astype(str), b.astype(str)):
-            xl, yl = x.lower(), y.lower()
-            m = max(len(xl), len(yl))
-            out.append(1.0 if m == 0 else 1.0 - _rf_dl.distance(xl, yl) / m)
-        return pd.Series(out, index=a.index, dtype="float64")
-    return pd.Series(
-        [dl_similarity(x, y) for x, y in zip(a.astype(str), b.astype(str))],
-        index=a.index,
-        dtype="float64",
-    )
+    sim = dl_similarity if _rf_dl is None else _rf_dl_similarity
+    return _pair_batch(a, b, lambda xs, ys: [sim(x, y) for x, y in zip(xs, ys)])
+
+
+def _damlev_sims(xs: list[str], ys: list[str]) -> np.ndarray:
+    xs = [x.lower() for x in xs]
+    ys = [y.lower() for y in ys]
+    longest = np.fromiter(map(max, map(len, xs), map(len, ys)), np.int64, len(xs))
+    # empty vs empty is distance 0 over max(1, 0): similarity 1.0
+    return 1.0 - osa_distance_batch(xs, ys) / np.maximum(longest, 1)
 
 
 def damlev_sim_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _rf_osa is not None:
-        out = []
-        for x, y in zip(a.astype(str), b.astype(str)):
-            xl, yl = x.lower(), y.lower()
-            m = max(len(xl), len(yl))
-            out.append(1.0 if m == 0 else 1.0 - _rf_osa.distance(xl, yl) / m)
-        return pd.Series(out, index=a.index, dtype="float64")
-    return pd.Series(
-        [damlev_similarity(x, y) for x, y in zip(a.astype(str), b.astype(str))],
-        index=a.index,
-        dtype="float64",
-    )
+    """``damlev_similarity`` per row via the bit-parallel OSA kernel:
+    integer distances, so the floats equal the scalar path's."""
+    return _pair_batch(a, b, _damlev_sims)
 
 
 def jaro_winkler_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            jaro_winkler_similarity(x.lower(), y.lower())
-            for x, y in zip(a.astype(str), b.astype(str))
+    return _pair_batch(
+        a,
+        b,
+        lambda xs, ys: [
+            jaro_winkler_similarity(x.lower(), y.lower()) for x, y in zip(xs, ys)
         ],
-        index=a.index,
-        dtype="float64",
     )
 
 

@@ -8,7 +8,10 @@ The reference's Ranker is one loop with several string measures
    alias surfaces, score 1.0 (``perfect_match``, ranking.py:286-325);
 2. the surfaces that missed (left-anti join) are paired with the alias
    surfaces that share a block key (``blocking``; salted for hot keys);
-3. a score step adds ``score`` to every pair;
+3. the pair set goes through one fixed-width exchange on ``mention``
+   (``pinned_repartition``: AQE cannot coalesce it to one task) and is
+   deduplicated; a score step then adds ``score`` to every pair — one
+   evaluation per distinct pair, after the exchange;
 4. a keep rule picks rows per surface — every tie of the best score
    (ranking.py:456-465), or threshold + top-k by (score desc,
    variation asc);
@@ -44,6 +47,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..datagen import EMB_DIM, hashed_ngram_embedding
+from ..functions.shuffle import pinned_repartition
 from ..functions.similarity import (
     containment_score,
     damlev_sim_batch,
@@ -55,19 +59,17 @@ from ..functions.text import alias_noise_filter
 from .blocking import salted, with_block_keys
 
 
-@pandas_udf(T.DoubleType())
-def damlev_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return damlev_sim_batch(a, b)
+# The score-step UDFs are pure, but marked non-deterministic so Catalyst
+# keeps the keep rule's `score >= t` / `score IS NOT NULL` filter above
+# the score projection: pushed below it (and below the pair distinct),
+# the filter evaluates the UDF a second time on every pre-dedup pair.
+damlev_sim_udf = pandas_udf(damlev_sim_batch, T.DoubleType()).asNondeterministic()
+jaro_winkler_udf = pandas_udf(jaro_winkler_batch, T.DoubleType()).asNondeterministic()
 
 
 @pandas_udf(T.DoubleType())
 def dl_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return dl_sim_batch(a, b)
-
-
-@pandas_udf(T.DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return jaro_winkler_batch(a, b)
 
 
 @pandas_udf(T.ArrayType(T.FloatType()))
@@ -174,8 +176,8 @@ def _blocked_pairs(
     m_s, a_s = salted(m, a.withColumnRenamed("variation", "alias"), salt_factor)
     a_s = a_s.withColumnRenamed("alias", "variation")
     pairs = m_s.join(a_s, ["block_key", "block_salt"], "inner")
-    # a pair may share both keys — dedup before scoring
-    return pairs.select("mention", "variation").distinct()
+    # a pair may share both keys — match_surfaces dedups before scoring
+    return pairs.select("mention", "variation")
 
 
 def pairwise(score_fn):
@@ -263,6 +265,10 @@ def match_surfaces(
         pairs = missed.crossJoin(
             aliases.select(F.col("alias").alias("variation")).distinct()
         )
+    # one fixed-width exchange on mention ahead of scoring: it satisfies
+    # the distinct, and AQE cannot coalesce it, so the score step runs
+    # on every core (see pinned_repartition)
+    pairs = pinned_repartition(pairs, "mention").distinct()
     scored = score(pairs)
 
     if keep is None:

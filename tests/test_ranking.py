@@ -212,6 +212,38 @@ def test_salting_preserves_results(spark, kb):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+def _plan_nodes(plan):
+    """Every node of an executed (adaptive, final) physical plan,
+    including the plans inside its query stages."""
+    yield plan
+    if plan.getClass().getSimpleName().endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+@pytest.mark.parametrize("method", ["fuzzy", "levenshtein"])
+def test_fuzzy_scoring_runs_once_on_every_partition(spark, kb, method):
+    """Plan shape of the scoring stage (threshold + top-k, and the ties
+    keep rule): the pair set goes through one fixed-width exchange on
+    mention, AQE cannot coalesce it, and the score UDF is evaluated once
+    per pair above it — the keep rule's filter is not pushed below the
+    pair distinct, where it would score every pair a second time."""
+    from t_res_spark.functions.shuffle import shuffle_width
+
+    queries = _queries(spark, "Shefiield", "London", "Lancastor", "Lndn")
+    df = ranking.find_candidates(queries, kb, method=method)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("ArrowEvalPython") == 1, optimized
+    assert df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan()
+    scoring = [n for n in _plan_nodes(final)
+               if n.getClass().getSimpleName() == "ArrowEvalPythonExec"]
+    assert len(scoring) == 1, final.toString()
+    assert scoring[0].execute().getNumPartitions() == shuffle_width(df) > 1
+
+
 def test_no_forced_broadcast_on_unbounded_sides(spark, kb):
     """Scale guard: neither the alias-surface side of perfect_match nor
     the query-embedding side of the embcosine score step may carry a broadcast
