@@ -1,8 +1,6 @@
 """Text normalization — native column expressions where possible.
 
 Reference parity:
-- n-dash fix: replace ``—`` with ``,`` everywhere except position 0
-  (/root/reference/geoparser/recogniser.py:369-379).
 - alias noise filter: drop variants containing ``", "`` or ``" ("``
   (/root/reference/geoparser/ranking.py:216-247).
 - normalized blocking key + vowel-stripped phonetic-ish key (our analog
@@ -13,16 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def fix_ndash(text: Column) -> Column:
-    """``—`` → ``,`` except at char 0 (recogniser.py:374-379)."""
-    return F.when(F.length(text) <= 1, text).otherwise(
-        F.concat(
-            F.substring(text, 1, 1),
-            F.regexp_replace(F.substring(text, 2, 0x7FFFFFF), "—", ","),
-        )
-    )
 
 
 def alias_noise_filter(alias: Column) -> Column:
@@ -53,12 +41,6 @@ def phonetic_key(s: Column) -> Column:
     skeleton = F.regexp_replace(lowered, "[aeiouy0-9]", "")
     collapsed = F.regexp_replace(skeleton, "(.)\\1+", "$1")
     return F.concat(F.substring(lowered, 1, 1), collapsed)
-
-
-def mention_sanity_filter(mention: Column) -> Column:
-    """Keep mentions of length > 1 that are not all-lowercase
-    (/root/reference/geoparser/pipeline.py:618)."""
-    return (F.length(mention) > 1) & (mention != F.lower(mention))
 
 
 def normalize_wiki_url(url: Column) -> Column:

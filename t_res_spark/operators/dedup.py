@@ -412,7 +412,12 @@ def embedding_near_duplicates(
     ``dim``: embedding dimensionality. Callers that know it (fixed
     encoder width, table contract) should pass it — when None a
     one-row probe job runs as a fallback (VERDICT r03 #9)."""
-    from .similarity_search import _dot, _hyperplanes, _norm, srp_buckets_arrow
+    from .similarity_search import (
+        _cosine_normed,
+        _hyperplanes,
+        _with_norm,
+        srp_buckets_arrow,
+    )
 
     if dim is None:
         dim_row = vectors.select(F.size(vec_col).alias("d")).first()
@@ -441,25 +446,24 @@ def embedding_near_duplicates(
         .select(id_col, "id_b")
         .distinct()
     )
-    # norms computed ONCE PER VECTOR and carried to the pair (the
-    # cosine used to re-fold both norms per pair — 3 interpreted
-    # 64-element folds per candidate; now 1). Same fold on the same
-    # array → bit-identical norm doubles → bit-identical cosines.
-    va = vectors.select(
-        id_col, F.col(vec_col), _norm(F.col(vec_col)).alias("norm_a")
-    )
-    vb = vectors.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        _norm(F.col(vec_col)).alias("norm_b"),
+    # norms are folded once per vector and carried to the pair (one
+    # interpreted fold per candidate instead of three), with the norm
+    # and cosine expressions of similarity_search's exact re-rank.
+    va = _with_norm(vectors, id_col, vec_col, "norm_a")
+    vb = _with_norm(
+        vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b")),
+        "id_b",
+        "vec_b",
+        "norm_b",
     )
     verified = (
         cand_ids.join(va, id_col)
         .join(vb, "id_b")
         .withColumn(
             "cos_sim",
-            _dot(F.col(vec_col), F.col("vec_b"))
-            / F.greatest(F.col("norm_a") * F.col("norm_b"), F.lit(1e-12)),
+            _cosine_normed(
+                F.col(vec_col), F.col("vec_b"), F.col("norm_a"), F.col("norm_b")
+            ),
         )
         .filter(F.col("cos_sim") >= threshold)
     )

@@ -1,16 +1,20 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths (task brief):
-- brute-force cosine top-k — the correctness baseline: a blocked
-  cross-join with native dot-product math (F.zip_with/F.aggregate) and a
-  window top-k. Exact, O(n·m); fine when one side is small/broadcast.
-- LSH-bucketed ANN — the scale path: sign-random-projection buckets
-  (SimHash over the embedding), candidates only within a bucket (plus
-  multi-probe via several hyperplane tables), then exact cosine re-rank.
-  Sub-linear candidate sets at 100 TB; recall tunable via tables/bits.
+Every search is candidate ids → one exact re-rank → top k (the shape of
+"Parallel Top-K Similarity Join Algorithms Using MapReduce", ICDE 2012):
 
-No UDFs anywhere — dot products, norms, and projections are all native
-column expressions (whole-stage codegen).
+- candidates: every (query, vector) pair (``brute_force_topk``, the
+  exact baseline), pairs sharing an SRP bucket in one of several
+  hyperplane tables (``lsh_topk``), or pairs sharing a cell — a
+  vector's nearest centroid against a query's ``nprobe`` nearest
+  (``ivf_topk``). Buckets and cells come from one numpy matmul per
+  Arrow batch (``srp_buckets_arrow``, ``ivf_cells_arrow``).
+- ``_exact_topk``: each vector attached once with its norm, the cosine
+  ``dot / max(norm·qnorm, 1e-12)`` as native column folds, top k by
+  (cosine desc, id asc). A NULL cosine is dropped, so a NULL or
+  wrong-width vector is in no top-k. ``dedup.embedding_near_duplicates``
+  verifies with the same norm and cosine expressions, so a pair's
+  cosine is bit-identical wherever it is computed.
 """
 
 from __future__ import annotations
@@ -30,7 +34,9 @@ def _dot(a, b):
     measured in r6 and rejected: at dim 64 it costs ~0.76 s of py4j
     Column-building per query and pushes whole-stage codegen over
     Janino's 64 KB method limit, so it executes as a BIGGER interpreted
-    tree (0.34 s vs 0.27 s for the fold on a 16k-row cosine scan)."""
+    tree (0.34 s vs 0.27 s for the fold on a 16k-row cosine scan).
+    Arrays of different widths give NULL (``zip_with`` pads the shorter
+    side with NULLs)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
@@ -38,8 +44,59 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
+def _cosine_normed(a, b, norm_a, norm_b):
+    """Cosine of two array columns whose norms are already columns."""
+    return _dot(a, b) / F.greatest(norm_a * norm_b, F.lit(1e-12))
+
+
 def cosine(a, b):
-    return _dot(a, b) / (F.greatest(_norm(a) * _norm(b), F.lit(1e-12)))
+    return _cosine_normed(a, b, _norm(a), _norm(b))
+
+
+def _with_norm(df: DataFrame, id_col: str, vec_col: str, norm_col: str) -> DataFrame:
+    """(id, vector, norm): each vector's norm folded once, so a pair
+    cosine costs one fold instead of three. Same fold on the same array
+    as ``cosine`` → bit-identical norms → bit-identical cosines."""
+    return df.select(id_col, vec_col, _norm(F.col(vec_col)).alias(norm_col))
+
+
+def _exact_topk(
+    cand_ids: DataFrame | None,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    q_id_col: str,
+    q_vec_col: str,
+) -> DataFrame:
+    """Steps 2 and 3 of every search: attach both vectors with their
+    norms to the bare (id, q_id) candidates (``None``: every pair — the
+    corpus streams past the broadcast query batch), exact cosine, top-k
+    by (cosine desc, id asc) with NULL cosines dropped.
+
+    The NULL test sits next to the rank filter, above the window: NULLs
+    sort after every cosine under ``desc``, so it keeps the same rows as
+    a filter below the window would, and Catalyst cannot push it under
+    the cosine projection and fold every pair's dot product twice."""
+    v = _with_norm(vectors, id_col, vec_col, "_norm")
+    q = F.broadcast(_with_norm(queries, q_id_col, q_vec_col, "_q_norm"))
+    if cand_ids is None:
+        pairs = v.crossJoin(q)
+    else:
+        pairs = cand_ids.join(v, id_col).join(q, q_id_col)
+    scored = pairs.withColumn(
+        "cos_sim",
+        _cosine_normed(
+            F.col(vec_col), F.col(q_vec_col), F.col("_norm"), F.col("_q_norm")
+        ),
+    )
+    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter((F.col("rnk") <= k) & F.col("cos_sim").isNotNull())
+        .select(q_id_col, id_col, "cos_sim", "rnk")
+    )
 
 
 def brute_force_topk(
@@ -51,75 +108,19 @@ def brute_force_topk(
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query. The query side is
-    broadcast (it is the small side by construction — a query batch);
-    the corpus side streams, so the plan is a single broadcast
-    nested-loop with codegen'd arithmetic and a top-k window."""
-    joined = vectors.crossJoin(F.broadcast(queries)).withColumn(
-        "cos_sim", cosine(F.col(vec_col), F.col(q_vec_col))
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
+    """Exact top-k cosine neighbors for each query: every (query,
+    vector) pair is a candidate. The query side is broadcast (it is the
+    small side by construction — a query batch); the corpus side
+    streams, so the plan is a single broadcast nested-loop and a top-k
+    window."""
+    return _exact_topk(
+        None, vectors, queries, k, id_col, vec_col, q_id_col, q_vec_col
     )
 
 
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.normal(size=(bits, dim)).astype("float64").tolist()
-
-
-def _const_double_array(values) -> "F.Column":
-    """array<double> literal built with ONE py4j round trip.
-
-    ``F.array(*[F.lit(float(x)) …])`` costs one py4j call per element —
-    measured ~1 s of DRIVER time per 2k-element plane/centroid matrix
-    on every query construction (the bench times construction too).
-    A single ``F.expr`` ships the whole literal as text; ``repr`` of a
-    Python float is the shortest round-trip form, so
-    ``Double.parseDouble`` reconstructs bit-identical doubles."""
-    return F.expr(
-        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in values) + ")"
-    )
-
-
-def srp_bucket(vec_col, planes: list[list[float]]):
-    """Sign-random-projection bucket id: one bit per hyperplane —
-    native column math, no UDF.
-
-    r6 reshape — FLAT per-bit folds instead of the former single-pass
-    nested fold: one ``zip_with(vec, plane_i, *)`` products array + one
-    scalar ``aggregate`` sum per hyperplane. The nested form (one
-    traversal whose accumulator was a bits-wide array rebuilt by an
-    inner ``zip_with`` at every element) allocated an array + ``bits``
-    structs per vector ELEMENT; both shapes are interpreted (HOFs are
-    excluded from whole-stage codegen), but the flat shape does ~8x
-    less allocation/dispatch — measured 4.44 s → 0.52 s for the 4-table
-    bucket projection over 16k x 64-dim vectors at sf0.1. (A statically
-    unrolled codegen chain was also tried: 2048 terms overflow Janino's
-    64 KB method limit, fall back to whole-tree interpretation, and run
-    slower than either fold — see _dot.) Per projection the multiply/
-    add sequence is the identical ascending-index order starting from
-    0.0, so every projection double is bit-identical to the old fold
-    (checksum-verified) and no SRP sign decision can move."""
-    bits = len(planes)
-    # 2^i stays exact and the bit sum inside int64 for bits <= 62
-    if bits > 62:
-        raise ValueError(f"srp_bucket supports at most 62 bits, got {bits}")
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_arr = _const_double_array(plane)
-        proj = F.aggregate(
-            F.zip_with(vec_col, plane_arr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        bucket = bucket + F.when(
-            proj > 0, F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return bucket
 
 
 def _dim_wide_rows(batch, dim: int):
@@ -150,10 +151,12 @@ def srp_buckets_arrow(
     per Arrow batch (guide §4.2: hand whole batches to vectorized
     native code) instead of a per-row interpreted fold.
 
-    The JVM fold shape (srp_bucket) costs ~0.65 µs per (element ×
-    plane) interpreted step — 1.7 s just to bucket 20k × 64-dim vectors
-    across 4 × 8 planes at sf1.0; the batched matmul is two orders of
-    magnitude cheaper and the Arrow transfer ships only (id, vec).
+    A per-row JVM fold (one ``zip_with`` + ``aggregate`` per plane, kept
+    in the tests as the reference this path must match) costs ~0.65 µs
+    per (element × plane) interpreted step — 1.7 s just to bucket 20k ×
+    64-dim vectors across 4 × 8 planes at sf1.0; the batched matmul is
+    two orders of magnitude cheaper and the Arrow transfer ships only
+    (id, vec).
 
     Cross-engine safety (why a float-order change is admissible HERE
     and not in the cosine re-rank): bucket bits are SIGN decisions, and
@@ -164,11 +167,17 @@ def srp_buckets_arrow(
     (8- and 12-bit plane sets, planted 1.5x copies included — r6
     audit), seven orders of magnitude above the ~1e-13 reordering noise
     of a 64-term dot product. Downstream, the exact cosine re-rank /
-    verify stays in the JVM fold — bit-identical as before."""
+    verify stays in the JVM fold — bit-identical as before.
+
+    At most 62 bits per table: 2^i stays exact and the bucket id inside
+    int64 (numpy's ``1 << i`` is 0 past bit 63, which would silently
+    ignore the planes beyond it)."""
     import pyarrow as pa
 
     tables = len(all_planes)
     bits = len(all_planes[0])
+    if bits > 62:
+        raise ValueError(f"srp_buckets_arrow supports at most 62 bits, got {bits}")
     dim = len(all_planes[0][0])
     P = np.concatenate(
         [np.asarray(p, dtype=np.float64) for p in all_planes], axis=0
@@ -200,14 +209,25 @@ def srp_buckets_arrow(
 
 
 def ivf_cells_arrow(
-    df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    n: int | None = None,
 ) -> DataFrame:
-    """(id, cell) nearest-centroid assignment — batched matmul + argmax
-    (same rationale and the same audited-margin safety argument as
-    srp_buckets_arrow: the min top1−top2 centroid-score gap over the
-    corpus is 2.3e-5 at sf0.1 / 4.1e-7 at sf1.0 — r6 audit — vs ~1e-13
-    reorder noise; np.argmax and ``array_position(cs, array_max(cs))``
-    both take the FIRST maximum)."""
+    """(id, cell) rows by centroid dot-product score — one batched
+    matmul per Arrow batch (same rationale and the same audited-margin
+    safety argument as srp_buckets_arrow: the min top1−top2
+    centroid-score gap over the corpus is 2.3e-5 at sf0.1 / 4.1e-7 at
+    sf1.0 — r6 audit — vs ~1e-13 reorder noise).
+
+    - ``n=None``: each row's nearest cell, the FIRST maximum (an exact
+      tie goes to the lower cell) — the corpus assignment.
+    - ``n``: each row's ``n`` nearest cells — the query probes, in
+      (score desc, cell DESC) order: a stable ascending sort reversed,
+      so of two tied cells the higher one is probed first.
+
+    Both tie rules are the ones ``_ann_ivf_oracle_sql`` states."""
     import pyarrow as pa
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -219,9 +239,17 @@ def ivf_cells_arrow(
             ids, v = _dim_wide_rows(batch, dim)
             if len(ids) == 0:
                 continue
-            cell = np.argmax(v @ C.T, axis=1).astype(np.int64)
+            scores = v @ C.T
+            if n is None:
+                cells = np.argmax(scores, axis=1)[:, None]
+            else:
+                cells = np.argsort(scores, axis=1, kind="stable")[:, ::-1][:, :n]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(cell)], names=[id_col, "cell"]
+                [
+                    pa.array(np.repeat(ids, cells.shape[1])),
+                    pa.array(cells.reshape(-1).astype(np.int64)),
+                ],
+                names=[id_col, "cell"],
             )
 
     return df.select(id_col, vec_col).mapInArrow(
@@ -243,15 +271,14 @@ def lsh_topk(
     q_vec_col: str = "q_vec",
 ) -> DataFrame:
     """ANN: candidates share an SRP bucket in at least one of ``tables``
-    hyperplane tables; exact cosine re-rank on the candidate set.
+    hyperplane tables; the shared exact cosine re-rank keeps the top k.
 
-    Plan shape (r6): corpus buckets come from ONE Arrow matmul pass
-    (srp_buckets_arrow — ids and buckets only, no payload), the
-    bucket probe joins bare ids, the distinct dedups bare (q_id, id)
-    pairs, and the two vectors are attached once to the surviving
-    candidate set for the EXACT cosine re-rank (which stays in the
-    JVM fold — bit-identical scores). Recall rises with ``tables``;
-    candidate volume falls with ``bits``."""
+    Plan shape: buckets come from one Arrow matmul pass per side
+    (srp_buckets_arrow — ids and buckets only, no payload), the bucket
+    probe joins bare ids, the distinct dedups bare (q_id, id) pairs, and
+    ``_exact_topk`` attaches each vector with its norm to the surviving
+    candidates. Recall rises with ``tables``; candidate volume falls
+    with ``bits``."""
     from .dedup import _rebalance
 
     # tiny-file guard (see dedup._rebalance): the per-vector projection
@@ -266,15 +293,8 @@ def lsh_topk(
         .select(id_col, q_id_col)
         .distinct()
     )
-    cands = cand_ids.join(vectors.select(id_col, vec_col), id_col).join(
-        F.broadcast(queries.select(q_id_col, q_vec_col)), q_id_col
-    )
-    scored = cands.withColumn("cos_sim", cosine(F.col(vec_col), F.col(q_vec_col)))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
+    return _exact_topk(
+        cand_ids, vectors, queries, k, id_col, vec_col, q_id_col, q_vec_col
     )
 
 
@@ -362,32 +382,6 @@ def ivf_train_centroids(
     return c.tolist()
 
 
-def ivf_cell(vec_col, centroids: list[list[float]]):
-    """Nearest-centroid id by cosine — ONE fold pass over the vector
-    accumulating all k centroid dot products (same no-CSE-safe shape as
-    srp_bucket), then an argmax over the k-array. Returns an expression
-    usable in select(); the caller must materialize the scores array in
-    a separate projection before argmax (Catalyst does not CSE across
-    higher-order functions)."""
-    # r6 reshape — flat per-centroid folds (same rationale, measurement
-    # and bit-exactness argument as srp_bucket: the nested
-    # array-accumulator fold allocated k-wide arrays per vector
-    # element; one zip_with + scalar fold per centroid does the same
-    # multiplies/adds in the same ascending order with ~8x less
-    # interpreter overhead).
-    scores = []
-    for c in centroids:
-        cent_arr = _const_double_array(c)
-        scores.append(
-            F.aggregate(
-                F.zip_with(vec_col, cent_arr, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda s, v: s + v,
-            )
-        )
-    return F.array(*scores)
-
-
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -400,48 +394,22 @@ def ivf_topk(
     q_vec_col: str = "q_vec",
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in their nearest-centroid cell;
-    each query probes its ``nprobe`` closest cells; candidates within
-    probed cells get an exact cosine re-rank.
+    each query probes its ``nprobe`` closest cells; the shared exact
+    cosine re-rank keeps the top k of the vectors in probed cells.
 
-    Plan: one shuffle co-locating (cell) on both sides — identical
-    join shape to the LSH and ER blocking stages. Recall rises with
-    ``nprobe``; candidate volume ≈ nprobe/k of the corpus per query."""
+    Plan shape: cells come from one Arrow matmul pass per side
+    (ivf_cells_arrow — one cell per corpus vector, ``nprobe`` per
+    query), the probe joins bare (id, cell) rows on the cell, and
+    ``_exact_topk`` attaches each vector with its norm to the pairs
+    (each pair occurs once: a vector has one cell, a query's probes are
+    distinct). Recall rises with ``nprobe``; candidate volume ≈
+    nprobe/k of the corpus per query."""
     from .dedup import _rebalance
 
     vectors = _rebalance(vectors, id_col)  # tiny-file guard (no-op at scale)
-    # corpus assignment via one Arrow matmul + argmax per batch (r6;
-    # audited-margin safety argument in ivf_cells_arrow); the vector
-    # payload is re-attached to the ids for the probe join + re-rank
-    v_cells = ivf_cells_arrow(vectors, id_col, vec_col, centroids).join(
-        vectors.select(id_col, vec_col), id_col
-    )
-    q_scored = queries.select(
-        q_id_col, q_vec_col, ivf_cell(F.col(q_vec_col), centroids).alias("cs")
-    )
-    # top-nprobe cells per query: sort (score, idx) structs descending
-    probe = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.zip_with(
-                    "cs",
-                    F.sequence(F.lit(0), F.size("cs") - 1),
-                    lambda s, i: F.struct(s.alias("s"), i.alias("i")),
-                )
-            )
-        ),
-        1,
-        nprobe,
-    )
-    q_cells = q_scored.select(
-        q_id_col, q_vec_col, F.explode(probe).alias("p")
-    ).select(q_id_col, q_vec_col, F.col("p.i").cast("long").alias("cell"))
-    cands = v_cells.join(q_cells, "cell").select(
-        id_col, vec_col, q_id_col, q_vec_col
-    )
-    scored = cands.withColumn("cos_sim", cosine(F.col(vec_col), F.col(q_vec_col)))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
+    v_cells = ivf_cells_arrow(vectors, id_col, vec_col, centroids)
+    q_cells = ivf_cells_arrow(queries, q_id_col, q_vec_col, centroids, n=nprobe)
+    cand_ids = v_cells.join(F.broadcast(q_cells), "cell").select(id_col, q_id_col)
+    return _exact_topk(
+        cand_ids, vectors, queries, k, id_col, vec_col, q_id_col, q_vec_col
     )

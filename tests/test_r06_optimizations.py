@@ -4,10 +4,10 @@ Each test pins an optimization whose INTERNALS changed against the
 semantics it must preserve:
 
 - srp_buckets_arrow / ivf_cells_arrow (Arrow matmul decisions) must
-  agree row-for-row with the JVM fold expressions on a corpus whose
-  sign/argmax margins dwarf float-reorder noise (the production
-  corpora are margin-audited; the fixture here is seeded gaussian —
-  margins ~1e-3);
+  agree row-for-row with the JVM reference folds (tests/jvm_folds.py)
+  on a corpus whose sign/argmax margins dwarf float-reorder noise (the
+  production corpora are margin-audited; the fixture here is seeded
+  gaussian — margins ~1e-3);
 - the min_by rewrite of align_spans/align_gold_tokens must reproduce
   the old window ordering INCLUDING the null edge cases (unaligned
   rows, mixed matched+unmatched groups, overlap ties);
@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from jvm_folds import ivf_cell, ivf_first_max_cell, ivf_probe_cells, srp_bucket
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -30,11 +31,7 @@ def _rand_vecs(spark, n=60, dim=16, seed=3):
 
 
 def test_srp_buckets_arrow_matches_jvm_fold(spark):
-    from t_res_spark.operators.similarity_search import (
-        _hyperplanes,
-        srp_bucket,
-        srp_buckets_arrow,
-    )
+    from t_res_spark.operators.similarity_search import _hyperplanes, srp_buckets_arrow
 
     vecs = _rand_vecs(spark)
     planes = [_hyperplanes(16, 6, seed=42 + t) for t in range(3)]
@@ -51,24 +48,26 @@ def test_srp_buckets_arrow_matches_jvm_fold(spark):
 
 
 def test_ivf_cells_arrow_matches_jvm_argmax(spark):
-    from t_res_spark.operators.similarity_search import (
-        _hyperplanes,
-        ivf_cell,
-        ivf_cells_arrow,
-    )
+    from t_res_spark.operators.similarity_search import _hyperplanes, ivf_cells_arrow
 
     vecs = _rand_vecs(spark, seed=9)
     cents = _hyperplanes(16, 5, seed=11)
     jvm = vecs.select(
         "vec_id", ivf_cell(F.col("embedding"), cents).alias("cs")
-    ).select(
-        "vec_id",
-        (F.array_position(F.col("cs"), F.array_max("cs")) - 1).alias("cell"),
-    )
+    ).select("vec_id", ivf_first_max_cell(F.col("cs")).alias("cell"))
     arrow = ivf_cells_arrow(vecs, "vec_id", "embedding", cents)
     j = {r["vec_id"]: r["cell"] for r in jvm.collect()}
     a = {r["vec_id"]: r["cell"] for r in arrow.collect()}
     assert j == a
+
+    # the query probes: the n nearest cells, as the struct-sort reference
+    jvm = vecs.select(
+        "vec_id", ivf_cell(F.col("embedding"), cents).alias("cs")
+    ).select("vec_id", F.explode(ivf_probe_cells(F.col("cs"), 3)).alias("cell"))
+    arrow = ivf_cells_arrow(vecs, "vec_id", "embedding", cents, n=3)
+    j = sorted((r["vec_id"], r["cell"]) for r in jvm.collect())
+    a = sorted((r["vec_id"], r["cell"]) for r in arrow.collect())
+    assert j == a and len(a) == 60 * 3
 
 
 def test_arrow_buckets_and_cells_skip_null_and_ragged_vectors(spark):
@@ -78,9 +77,7 @@ def test_arrow_buckets_and_cells_skip_null_and_ragged_vectors(spark):
     references' buckets and cells, the bad rows get none."""
     from t_res_spark.operators.similarity_search import (
         _hyperplanes,
-        ivf_cell,
         ivf_cells_arrow,
-        srp_bucket,
         srp_buckets_arrow,
     )
 
@@ -110,10 +107,7 @@ def test_arrow_buckets_and_cells_skip_null_and_ragged_vectors(spark):
     cents = _hyperplanes(64, 5, seed=11)
     jvm = valid.select(
         "vec_id", ivf_cell(F.col("embedding"), cents).alias("cs")
-    ).select(
-        "vec_id",
-        (F.array_position(F.col("cs"), F.array_max("cs")) - 1).alias("cell"),
-    )
+    ).select("vec_id", ivf_first_max_cell(F.col("cs")).alias("cell"))
     arrow = ivf_cells_arrow(vecs, "vec_id", "embedding", cents)
     j = {r["vec_id"]: r["cell"] for r in jvm.collect()}
     a = {r["vec_id"]: r["cell"] for r in arrow.collect()}

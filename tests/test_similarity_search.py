@@ -83,15 +83,27 @@ def test_lsh_planted_neighbor_recall_floor(spark):
     assert recall >= 0.95, f"planted-neighbor recall@10 = {recall:.3f} over {n_q}"
 
 
-def test_srp_bucket_rejects_overflow_bits():
-    """bits > 62 would overflow the int64 bucket-id accumulation —
-    must fail loudly, not corrupt bucket ids (ADVICE r02)."""
-    import pytest
+def test_srp_bucket_rejects_overflow_bits(spark, vectors):
+    """bits > 62 would overflow the int64 bucket-id accumulation (numpy's
+    ``1 << i`` is 0 past bit 63, so the planes beyond it would be
+    silently ignored) — the Arrow path lsh_topk runs must fail loudly,
+    like its JVM reference fold (ADVICE r02)."""
+    from jvm_folds import srp_bucket
 
-    from t_res_spark.operators.similarity_search import _hyperplanes, srp_bucket
+    from t_res_spark.operators.similarity_search import _hyperplanes
 
+    queries = vectors.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
     with pytest.raises(ValueError, match="62 bits"):
-        srp_bucket(F.col("v"), _hyperplanes(4, 64, seed=1))
+        ss.lsh_topk(vectors, queries, dim=8, bits=64)
+    planes_63 = [_hyperplanes(8, 63, seed=1)]
+    with pytest.raises(ValueError, match="62 bits"):
+        ss.srp_buckets_arrow(vectors, "vec_id", "embedding", planes_63)
+    with pytest.raises(ValueError, match="62 bits"):
+        srp_bucket(F.col("embedding"), planes_63[0])
+    # 62 bits is still accepted
+    ss.srp_buckets_arrow(vectors, "vec_id", "embedding", [_hyperplanes(8, 62, seed=1)])
 
 
 def test_cosine_matches_numpy(spark, vectors):
@@ -153,19 +165,99 @@ def test_ivf_candidate_volume_bounded(spark):
     contract: candidate volume shrinks with k)."""
     import numpy as np
 
-    from t_res_spark.operators.similarity_search import ivf_cell, ivf_train_centroids
-    from pyspark.sql import functions as F
+    from t_res_spark.operators.similarity_search import (
+        ivf_cells_arrow,
+        ivf_train_centroids,
+    )
 
     rng = np.random.RandomState(9)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(400)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = ivf_train_centroids(vecs, k=8, sample_size=400, seed=1)
-    cells = vecs.select(
-        ivf_cell(F.col("embedding"), cents).alias("cs")
-    ).select((F.array_position(F.col("cs"), F.array_max("cs")) - 1).alias("cell"))
+    cells = ivf_cells_arrow(vecs, "vec_id", "embedding", cents)
     sizes = [r["n"] for r in cells.groupBy("cell").agg(F.count("*").alias("n")).collect()]
+    assert sum(sizes) == 400         # one cell per vector
     assert len(sizes) >= 4           # centroids actually used
     assert max(sizes) < 400 * 0.6    # no degenerate single cell
+
+
+def test_ivf_tie_rules_duplicated_centroid(spark):
+    """An exact score tie from a duplicated centroid (cells 1 and 2):
+    the corpus assignment takes the first maximum (the LOWER cell,
+    ``cell ASC``), the query probes list the HIGHER cell first
+    (``s DESC, cell DESC``) — the two rules _ann_ivf_oracle_sql states.
+    Through ivf_topk, a query tied between the empty cell 2 and the
+    populated cell 1 therefore probes cell 2 first: at nprobe=1 it finds
+    nothing, and a query whose second-best score is the tie probes
+    cells 0 and 2, never reaching cell 1."""
+    from t_res_spark.operators.similarity_search import ivf_cells_arrow, ivf_topk
+
+    e0, e1 = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+    cents = [e0, e1, e1]
+    near0 = [(i, [1.0, 0.1 * i, 0.05, 0.02 * i]) for i in range(4)]
+    near1 = [(10 + i, [0.05, 1.0, 0.1 * i, 0.02 * i]) for i in range(4)]
+    schema = "vec_id long, embedding array<double>"
+    vecs = spark.createDataFrame(near0 + near1, schema)
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.2, 0.0, 0.1]), (101, [0.1, 1.0, 0.3, 0.0])],
+        "q_id long, q_vec array<double>",
+    )
+
+    cells = ivf_cells_arrow(vecs, "vec_id", "embedding", cents).collect()
+    cells = {r["vec_id"]: r["cell"] for r in cells}
+    assert cells == {**{i: 0 for i in range(4)}, **{10 + i: 1 for i in range(4)}}
+    probes = ivf_cells_arrow(queries, "q_id", "q_vec", cents, n=2)
+    assert sorted((r["q_id"], r["cell"]) for r in probes.collect()) == [
+        (100, 0), (100, 2), (101, 1), (101, 2)
+    ]
+    first = ivf_cells_arrow(queries, "q_id", "q_vec", cents, n=1)
+    assert {r["q_id"]: r["cell"] for r in first.collect()} == {100: 0, 101: 2}
+
+    got = ivf_topk(vecs, queries, cents, k=10, nprobe=2).collect()
+    assert {(r["q_id"], r["vec_id"]) for r in got} == {
+        *((100, i) for i in range(4)), *((101, 10 + i) for i in range(4))
+    }
+    got = ivf_topk(vecs, queries, cents, k=10, nprobe=1).collect()
+    assert {(r["q_id"], r["vec_id"]) for r in got} == {(100, i) for i in range(4)}
+
+
+def test_null_and_ragged_vectors_never_in_topk(spark):
+    """brute_force_topk, lsh_topk and ivf_topk on one frame with a NULL
+    and a 5-wide corpus vector beside 4-wide ones, and a NULL and a
+    2-wide query beside a 4-wide one: no row has a NULL cos_sim, the bad
+    queries get no rows, the bad vectors are nobody's neighbour, and the
+    good query's rows equal those of the same search without the bad
+    rows."""
+    import numpy as np
+
+    from t_res_spark.operators.similarity_search import _hyperplanes
+
+    rng = np.random.RandomState(4)
+    good = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(6)]
+    bad = [(10, None), (11, [float(x) for x in rng.normal(size=5)])]
+    vschema = "vec_id long, embedding array<double>"
+    qschema = "q_id long, q_vec array<double>"
+    clean_v = spark.createDataFrame(good, vschema)
+    dirty_v = spark.createDataFrame(good[:3] + bad + good[3:], vschema)
+    q_good = [(0, [float(x) for x in rng.normal(size=4)])]
+    clean_q = spark.createDataFrame(q_good, qschema)
+    dirty_q = spark.createDataFrame(q_good + [(1, None), (2, [1.0, 2.0])], qschema)
+    cents = _hyperplanes(4, 3, seed=2)
+
+    searches = {
+        "brute": lambda v, q: ss.brute_force_topk(v, q, k=10),
+        "lsh": lambda v, q: ss.lsh_topk(v, q, dim=4, k=10, bits=2, tables=4),
+        "ivf": lambda v, q: ss.ivf_topk(v, q, cents, k=10, nprobe=3),
+    }
+    for name, search in searches.items():
+        rows = search(dirty_v, dirty_q).collect()
+        assert all(r["cos_sim"] is not None for r in rows), name
+        assert {r["q_id"] for r in rows} == {0}, name
+        assert not {r["vec_id"] for r in rows} & {10, 11}, name
+        want = sorted(tuple(r) for r in search(clean_v, clean_q).collect())
+        assert sorted(tuple(r) for r in rows) == want, name
+        if name != "lsh":  # every cell probed / every pair: all 6 ranked
+            assert len(rows) == 6, name
 
 
 def test_ivf_train_degenerate_sample(spark):

@@ -335,7 +335,7 @@ def ann_margin_audit(bits: int = 8, tables: int = 4, seed: int = 42) -> None:
         import __spark_entry__ as entry_mod
 
         C = np.asarray(entry_mod._ivf_fixture_centroids(dim))
-        S = V @ C.T  # (n, k) raw dot scores — exactly ivf_cell's math
+        S = V @ C.T  # (n, k) raw dot scores — ivf_cells_arrow's matmul
         srt = np.sort(S, axis=1)[:, ::-1]
         cell_gap = float((srt[:, 0] - srt[:, 1]).min())
         assert cell_gap > 1e-9, (sf, cell_gap)
