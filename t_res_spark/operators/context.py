@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..datagen import EMB_DIM, hashed_ngram_embedding
+from ..datagen import EMB_DIM
 from ..functions.shuffle import pinned_repartition
+from .ranking import embed_udf
 
 N_LOOPS = 10  # mulrel_ranker.py:403 (n_loops)
 DAMPING = 0.5  # mulrel_ranker.py:421 (df)
@@ -282,7 +283,7 @@ def prerank_truncate(
     # on orders of magnitude fewer rows. Identical embeddings reach the
     # ctx fold, whose array_sort already makes the sum order canonical.
     surf = rows.select("mention").distinct().withColumn(
-        "m_emb", _embed_expr("mention")
+        "m_emb", embed_udf("mention")
     )
     ment = rows.select("conv_id", "mention").distinct().join(surf, "mention")
     # sort the collected (mention, emb) structs before the float fold:
@@ -326,16 +327,6 @@ def prerank_truncate(
     )
 
 
-def _embed_expr(col: str):
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed_udf(s: pd.Series) -> pd.Series:
-        return s.astype(str).map(
-            lambda x: hashed_ngram_embedding(x, EMB_DIM).tolist()
-        )
-
-    return embed_udf(col)
-
-
 def context_disambiguate(
     mentions: DataFrame,
     candidates: DataFrame,
@@ -369,7 +360,7 @@ def context_disambiguate(
         F.max("abs_relv").alias("abs_relv")
     )
     qid_emb = dedup.select("qid").distinct().withColumn(
-        "emb", _embed_expr("qid")
+        "emb", embed_udf("qid")
     )
     priored = dedup.withColumn(
         "prior", F.col("abs_relv") / F.sum("abs_relv").over(w)

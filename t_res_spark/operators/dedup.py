@@ -9,10 +9,13 @@ operator as entity resolution (operators/clustering.py).
 Scale notes:
 - exact dedup is one map-side-combinable groupBy on a 64/128-bit digest
   (never on raw text — shuffle bytes stay tiny);
-- MinHash/LSH shuffles (band_hash → doc) pairs: band count × rows, with
-  per-bucket pair generation bounded by a cap (huge buckets are exact-
-  duplicate families — route them through exact dedup, don't pair them);
-- SimHash buckets by table rotation of the 64-bit fingerprint;
+- MinHash and SimHash share one pair generator, ``_bucket_pairs``: only
+  (band, bucket, doc_id) rows are shuffled, a bucket at or under the
+  cap expands to all its pairs, and a bucket over the cap (an exact or
+  near-exact duplicate family) to the k-1 star pairs (min id, x) — its
+  members still reach one cluster, in linear work;
+- embedding near-dup buckets by SRP hyperplane tables (a self-join,
+  see ``embedding_near_duplicates``);
 - all near-dup candidate pairs go through a verify stage (true Jaccard /
   Hamming / cosine) before edges are emitted — LSH alone over-merges.
 
@@ -165,29 +168,34 @@ def _bucket_pairs(
     """(key..., doc_id) bucket membership → distinct candidate (a, b)
     pairs with a < b.
 
-    ONE aggregation shuffle: ids are collected per bucket
-    (map-side-combinable into arrays bounded by the cap filter) and the
-    k·(k-1)/2 pairs expand NATIVELY from the sorted array — no
-    window-count pass and no bucket self-join (the previous plan's two
-    extra shuffles of the same rows). A whole bucket lands in one task
-    either way (that is what bucketing means); the cap bounds both the
-    array row and the quadratic expansion, and over-cap buckets are
-    exact/near-exact families the cheap exact pass already groups."""
+    ONE aggregation shuffle of bare ids: ids are collected per bucket
+    and the pairs expand NATIVELY from the sorted array — no
+    window-count pass and no bucket self-join. A bucket of k ≤
+    ``bucket_cap`` members gives all k·(k-1)/2 pairs; a bucket over the
+    cap gives the k-1 star pairs (ids[0], x). The star keeps the
+    bucket's members connected for the verify and the closure (a large
+    exact-duplicate family is one cluster) while the work stays linear
+    in k."""
     buckets = (
         banded.groupBy(*key_cols)
         .agg(F.collect_list("doc_id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= bucket_cap))
+        .filter(F.size("ids") > 1)
         .select(F.array_sort("ids").alias("ids"))
     )
-    pairs_arr = F.flatten(
+    ids, n = F.col("ids"), F.size("ids")
+    all_pairs = F.flatten(
         F.transform(
-            "ids",
+            ids,
             lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
+                F.slice(ids, i + 2, n),
                 lambda y: F.struct(x.alias("a"), y.alias("b")),
             ),
         )
     )
+    star = F.transform(
+        F.slice(ids, 2, n), lambda y: F.struct(ids[0].alias("a"), y.alias("b"))
+    )
+    pairs_arr = F.when(n <= bucket_cap, all_pairs).otherwise(star)
     return (
         buckets.select(F.explode(pairs_arr).alias("p"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -221,85 +229,35 @@ def minhash_lsh_pairs(
     *,
     estimate_threshold: float,
 ) -> DataFrame:
-    """Band the signatures, bucket, emit candidate (a, b) pairs.
+    """Band the signatures, bucket (``_bucket_pairs``: all pairs of a
+    bucket of at most ``bucket_cap`` members, the star pairs of a larger
+    one), emit candidate (a, b) pairs whose signature estimate is at
+    least ``estimate_threshold - 2/sqrt(num_hashes)`` (≈4σ of the
+    estimator, so recall holds at any signature length).
 
-    Buckets larger than ``bucket_cap`` are skipped (they are exact
-    or near-exact duplicate families — the cheap exact pass catches
-    them; pairing them is O(n²) for no information).
-
-    ``estimate_threshold``: the signature-estimate pre-filter is FUSED
-    into the bucket aggregation — the full (doc_id, sig)
-    structs ride the one banding shuffle, pairs are born inside the
-    bucket row with their estimate already computed (an in-array
-    zip_with/aggregate over the two signatures), and only (a, b)
-    survivors of ``estimate >= threshold - 2/sqrt(num_hashes)`` are
-    exploded. Compared to filtering bare pairs afterwards
-    (pairs → join sigs → join sigs → filter) this saves two
-    signature joins — i.e. two shuffles of every candidate pair —
-    at the cost of cap-bounded O(k²·num_hashes) comparisons per
-    bucket done where the data already lives.
-
-    Skew guard (ADVICE r03): bucket membership is pre-counted on an
-    ids-only pass and the heavy (doc_id, sig) structs are semi-joined
-    to under-cap buckets BEFORE the collect aggregation — an over-cap
-    bucket (a large exact-dup family) never materializes a signature
-    array in any agg buffer (~512 B/doc × family size otherwise)."""
-    band_arr = _band_hashes(bands, rows_per_band)
-    # ids-only pre-count: recomputing the band hashes is cheap codegen;
-    # shuffling ids instead of (doc_id, sig) structs is 64x lighter
-    light = signatures.select("doc_id", F.posexplode(band_arr).alias("band", "bucket"))
-    ok_buckets = (
-        light.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") > 1) & (F.col("n") <= bucket_cap))
-        .select("band", "bucket")
-    )
+    Only ids go through the banding shuffle, so no bucket, however
+    large, buffers a signature array (the ADVICE r03 skew guard); the
+    signatures are joined to the distinct bare pairs once per side."""
     banded = signatures.select(
-        F.struct("doc_id", "sig").alias("ds"),
-        F.posexplode(band_arr).alias("band", "bucket"),
+        "doc_id", F.posexplode(_band_hashes(bands, rows_per_band)).alias("band", "bucket")
     )
-    # array_sort on struct<doc_id, sig> orders by doc_id (first field) —
-    # same canonical a < b pair orientation as _bucket_pairs; the semi
-    # join makes the post-agg cap filter redundant (counts come from
-    # the identical banding derivation)
-    buckets = (
-        banded.join(ok_buckets, ["band", "bucket"], "semi")
-        .groupBy("band", "bucket")
-        .agg(F.collect_list("ds").alias("items"))
-        .select(F.array_sort("items").alias("items"))
-    )
-
-    def _est(x, y):
-        matches = F.aggregate(
-            F.zip_with(x["sig"], y["sig"], lambda u, v: (u == v).cast("int")),
-            F.lit(0),
-            lambda acc, z: acc + z,
-        )
-        return matches / F.greatest(F.size(x["sig"]), F.lit(1))
-
-    pairs_arr = F.flatten(
-        F.transform(
-            "items",
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(F.col("items"), i + 2, F.size("items")),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("a"),
-                        y["doc_id"].alias("b"),
-                        _est(x, y).alias("est"),
-                    ),
-                ),
-                lambda p: p["est"]
-                >= F.lit(estimate_threshold)
-                - F.lit(2.0)
-                / F.sqrt(F.greatest(F.size(x["sig"]), F.lit(1)).cast("double")),
-            ),
-        )
+    cands = _bucket_pairs(banded, ["band", "bucket"], bucket_cap)
+    sa = signatures.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
+    sb = signatures.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
+    n = F.greatest(F.size("sig_a"), F.lit(1))
+    matches = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda u, v: (u == v).cast("int")),
+        F.lit(0),
+        lambda acc, z: acc + z,
     )
     return (
-        buckets.select(F.explode(pairs_arr).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct()
+        cands.join(sa, "a")
+        .join(sb, "b")
+        .filter(
+            matches / n
+            >= F.lit(estimate_threshold) - F.lit(2.0) / F.sqrt(n.cast("double"))
+        )
+        .select("a", "b")
     )
 
 
@@ -355,18 +313,17 @@ def near_duplicate_clusters(
     map to themselves). ``shingle_n``: word-shingle width — 5 for strict
     long-document dedup, 3 when single-word edits must still collide.
 
-    CC runs on the native (long) doc ids — cheaper shuffles and
-    comparisons than strings; labels are cast back at the surface."""
-    # Fused plan: signatures are computed once and consumed by the
-    # banding shuffle (structs) plus the ids-only bucket pre-count —
-    # TWO subplans sharing the signature subtree. Measured r6: AQE's
-    # exchange reuse does NOT kick in for the duplicated aggregation
-    # subtree at runtime (sig+pairs timed ≈ 2x sig alone), so the
-    # signature stage ran twice per query. A LAZY ``cache()`` (no extra
-    # materialization job — the pre-count pass populates it, the
-    # banding pass reads it; released right after the pair checkpoint)
-    # shares it: full-query A/B, interleaved min-of-5 —
-    # sf1.0 9.9 s → 7.5 s, sf0.1 4.5 s → 3.8 s. (An EAGER
+    Buckets over the banding cap contribute star pairs, so an exact
+    or near-exact duplicate family of any size is still one cluster."""
+    # Signatures are consumed three times: by the banding shuffle and by
+    # the estimate filter's two signature joins. Measured r6 (with two
+    # consumers): AQE's exchange reuse does NOT kick in for the
+    # duplicated aggregation subtree at runtime (sig+pairs timed ≈ 2x
+    # sig alone), so without a cache the signature stage runs once per
+    # consumer. A LAZY ``cache()`` (no extra materialization job;
+    # released right after the pair checkpoint) shares it: full-query
+    # A/B, interleaved min-of-5 — sf1.0 9.9 s → 7.5 s, sf0.1 4.5 s →
+    # 3.8 s. (An EAGER
     # localCheckpoint of the signatures was also tried and LOST at
     # sf0.1 — 3.1-4.0 s → 5.8-6.5 s — the materialization job
     # serializes the pipeline; the lazy cache doesn't.)
@@ -383,9 +340,18 @@ def near_duplicate_clusters(
     sigs.unpersist()  # pair set is materialized; the sig cache is dead
     verified = jaccard_verify(docs, near, text_col, shingle_n, threshold)
     edges = verified.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    return _cluster_labels(docs, "doc_id", edges)
+
+
+def _cluster_labels(rows: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
+    """(doc_id, dup_cluster) over every row of ``rows``: connected
+    components of the verified (src, dst) edges, a row in no edge
+    labelled by itself. CC runs on the native id type (longs shuffle and
+    compare cheaper than strings); both columns are cast to string only
+    at the output surface."""
     labels = connected_components(edges)
     return (
-        docs.select(F.col("doc_id").alias("mention_id"))
+        rows.select(F.col(id_col).alias("mention_id"))
         .join(labels, "mention_id", "left")
         .select(
             F.col("mention_id").cast("string").alias("doc_id"),
@@ -437,6 +403,12 @@ def embedding_near_duplicates(
     # r6; sign-margin audit there covers this corpus incl. the planted
     # 1.5x copies), ids-only rows
     bucketed_ids = srp_buckets_arrow(vectors, id_col, vec_col, planes)
+    # An uncapped (table_id, bucket) self-join, not ``_bucket_pairs``: a
+    # cap or star would drop true pairs that d5's brute-force oracle
+    # counts, and on a hot bucket (3,000 identical 64-d vectors, 4
+    # tables, 4,498,500 pairs; 4 cores) the self-join counted its pairs
+    # in 3.0-3.7 s, a per-member collect expansion in 7.6-9.6 s and
+    # ``_bucket_pairs``' per-bucket flatten in 17.7 s.
     other_ids = bucketed_ids.select(
         F.col(id_col).alias("id_b"), "table_id", "bucket"
     )
@@ -467,20 +439,8 @@ def embedding_near_duplicates(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-    # CC on the native id type (longs shuffle/compare cheaper);
-    # string cast only at the output surface.
-    edges = verified.select(
-        F.col(id_col).alias("src"), F.col("id_b").alias("dst")
-    )
-    labels = connected_components(edges)
-    return (
-        vectors.select(F.col(id_col).alias("mention_id"))
-        .join(labels, "mention_id", "left")
-        .select(
-            F.col("mention_id").cast("string").alias("doc_id"),
-            F.coalesce("cluster_id", "mention_id").cast("string").alias("dup_cluster"),
-        )
-    )
+    edges = verified.select(F.col(id_col).alias("src"), F.col("id_b").alias("dst"))
+    return _cluster_labels(vectors, id_col, edges)
 
 
 def simhash(docs: DataFrame, text_col: str = "text", bits: int = 64) -> DataFrame:
@@ -542,11 +502,12 @@ def simhash_near_pairs(
     least one band is identical — recall is exact for
     ``max_hamming < bands`` (property-tested). Bucket key is
     (band_idx, segment_value): segment r = ``(simhash >> 16r) & 0xFFFF``
-    (the mask makes the top band sign-safe). Buckets over
-    ``bucket_cap`` are skipped, exactly like minhash_lsh_pairs — a
+    (the mask makes the top band sign-safe). Pairs come from
+    ``_bucket_pairs``, as in minhash_lsh_pairs: a bucket over
+    ``bucket_cap`` gives only its k-1 star pairs (min id, x) — a
     64k-bucket band over 10⁹ docs would otherwise quadratically
-    explode; oversized buckets are exact/near-exact families the cheap
-    exact pass already groups."""
+    explode — so recall inside an over-cap bucket covers the pairs
+    with its smallest id."""
     seg_w = 64 // bands
     mask = (1 << seg_w) - 1
     banded = fingerprints.select(

@@ -32,8 +32,7 @@ The reference's Ranker is one loop with several string measures
 All methods share query dedup before scoring (ranking.py:674), so the
 cost scales with |distinct surfaces|; the alias noise filter pushed to
 the scan (ranking.py:216-247); and the variation → QID resolution join
-(ranking.py:679-705). The persisted candidate-cache anti-join hook
-(ranking.py:315-316) lives in ``plans.pipeline``.
+(ranking.py:679-705).
 
 Output contract: candidates(mention, variation, score, qid, relv, abs_relv).
 """
@@ -57,6 +56,7 @@ from ..functions.similarity import (
 )
 from ..functions.text import alias_noise_filter
 from .blocking import salted, with_block_keys
+from .similarity_search import _dot
 
 
 # The score-step UDFs are pure, but marked non-deterministic so Catalyst
@@ -188,21 +188,13 @@ def pairwise(score_fn):
     )
 
 
-def cosine_score(emb_a, emb_b):
-    """Native dot product of unit vectors (cosine) — zip_with + aggregate,
-    stays inside whole-stage codegen; the Spark-first replacement for the
-    reference's faiss cosine (ranking.py:549-562)."""
-    return F.aggregate(
-        F.zip_with(emb_a, emb_b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def embedding_cosine(embeddings_kb: DataFrame):
     """Score step of the DeezyMatch analog (ranking.py:471-568): cosine
     of hashed n-gram embeddings, the reference's ``1 - dist`` cosine
-    branch (ranking.py:558-562).
+    branch (ranking.py:558-562). The embeddings are unit vectors, so the
+    cosine is their dot product (``similarity_search._dot``), the
+    Spark-first replacement for the reference's faiss cosine
+    (ranking.py:549-562).
 
     Query-side embeddings are computed once per distinct mention with
     the encoder used for the KB (datagen.hashed_ngram_embedding) in an
@@ -221,7 +213,7 @@ def embedding_cosine(embeddings_kb: DataFrame):
         return (
             pairs.join(q_emb, "mention")
             .join(kb, "variation", "inner")
-            .withColumn("score", cosine_score(F.col("q_emb"), F.col("v_emb")))
+            .withColumn("score", _dot(F.col("q_emb"), F.col("v_emb")))
         )
 
     return score

@@ -109,12 +109,105 @@ def test_simhash_pigeonhole_recall(spark):
 
 
 def test_simhash_bucket_cap_skips_huge_buckets(spark):
-    """Buckets above bucket_cap emit no pairs (the anti-explosion rule
-    shared with minhash_lsh_pairs)."""
+    """A bucket above bucket_cap emits only its k-1 star pairs
+    (min id, x) — linear, never the quadratic expansion (the rule
+    shared with minhash_lsh_pairs); at or under the cap, every pair."""
     rows = [(i, 0) for i in range(40)]  # 40 identical fingerprints
     fps = spark.createDataFrame(rows, "doc_id long, simhash long")
-    assert dedup.simhash_near_pairs(fps, bucket_cap=10).count() == 0
+    capped = {(r["a"], r["b"]) for r in dedup.simhash_near_pairs(fps, bucket_cap=10).collect()}
+    assert capped == {(0, x) for x in range(1, 40)}  # exactly 39 pairs
     assert dedup.simhash_near_pairs(fps, bucket_cap=50).count() == 40 * 39 // 2
+
+
+def test_exact_family_over_bucket_cap_is_one_cluster(spark):
+    """60 identical documents fill every MinHash band bucket past the
+    cap of 50; the star pairs still join them into one dup_cluster, and
+    the unrelated documents stay singletons."""
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(i, text) for i in range(60)]
+    rows += [(1000 + j, " ".join(f"u{j}w{w}" for w in range(10))) for j in range(20)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r["dup_cluster"] for r in dedup.near_duplicate_clusters(docs).collect()}
+    assert len(out) == 80
+    assert {out[str(i)] for i in range(60)} == {"0"}
+    assert all(out[str(1000 + j)] == str(1000 + j) for j in range(20))
+
+
+def test_bucket_pairs_sizes_orientation_and_dedup(spark):
+    """Buckets of 1, 2, cap and cap+1 members: pairs are oriented a < b,
+    a pair two buckets share is emitted once, under-cap buckets expand
+    fully, and an over-cap bucket adds at most its k-1 star pairs."""
+    cap = 4
+    members = {
+        (0, 1): [7],
+        (0, 2): [5, 3],
+        (1, 2): [3, 5],  # the same pair again, from another band
+        (0, 3): [9, 4, 6, 3],  # exactly cap
+        (0, 4): [24, 21, 20, 23, 22],  # cap + 1
+    }
+    banded = spark.createDataFrame(
+        [(band, bucket, d) for (band, bucket), ids in members.items() for d in ids],
+        "band int, bucket long, doc_id long",
+    )
+    got = [(r["a"], r["b"]) for r in dedup._bucket_pairs(banded, ["band", "bucket"], cap).collect()]
+    assert len(got) == len(set(got))
+    assert all(a < b for a, b in got)
+    small = {p for p in got if p[0] < 20}
+    assert small == {(3, 5), (3, 4), (3, 6), (3, 9), (4, 6), (4, 9), (6, 9)}
+    over = {p for p in got if p[0] >= 20}
+    assert over <= {(20, x) for x in (21, 22, 23, 24)}
+
+
+def test_minhash_lsh_pairs_matches_python_banding(spark):
+    """minhash_lsh_pairs against a pure-Python recomputation over the
+    collected signatures: band buckets keyed by (band, signature slice),
+    all pairs of a bucket of at most ``cap`` members (star pairs above),
+    then the estimate filter est >= t - 2/sqrt(num_hashes)."""
+    import math
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"v{i}" for i in range(400)]
+    rows, doc = [], 0
+    for _ in range(6):  # families of graded overlap with their base
+        base = rng.sample(vocab, 30)
+        for k in (0, 2, 5, 9, 14):
+            words = list(base)
+            for j in rng.sample(range(30), k):
+                words[j] = rng.choice(vocab)
+            rows.append((doc, " ".join(words)))
+            doc += 1
+    rows += [(100 + i, "one family of exact copies that fills its buckets") for i in range(8)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    bands, r, cap, t = 32, 2, 8, 0.9
+    sigs = dedup.minhash_signatures(docs, shingle_n=3).cache()
+    got = {
+        (p["a"], p["b"])
+        for p in dedup.minhash_lsh_pairs(sigs, bands, r, cap, estimate_threshold=t).collect()
+    }
+    sig = {row["doc_id"]: row["sig"] for row in sigs.collect()}
+    sigs.unpersist()
+
+    buckets: dict = {}
+    for d, s in sig.items():
+        for b in range(bands):
+            buckets.setdefault((b, tuple(s[b * r:(b + 1) * r])), []).append(d)
+    cands = set()
+    for ids in buckets.values():
+        ids = sorted(ids)
+        if len(ids) <= cap:
+            cands |= {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]}
+        else:
+            cands |= {(ids[0], b) for b in ids[1:]}
+    n = len(next(iter(sig.values())))
+    floor = t - 2.0 / math.sqrt(n)
+    want = {
+        (a, b) for a, b in cands
+        if sum(u == v for u, v in zip(sig[a], sig[b])) / n >= floor
+    }
+    assert max(len(ids) for ids in buckets.values()) == cap  # cap boundary hit
+    assert 0 < len(want) < len(cands)  # the estimate filter keeps and drops
+    assert got == want
 
 
 def test_rebalance_narrow_scan_only(spark, tmp_path):

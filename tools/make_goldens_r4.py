@@ -280,11 +280,11 @@ def d3b_expected(max_hamming: int = 3, bands: int = 4,
             buckets.setdefault((r, (u >> (seg_w * r)) & mask), []).append(doc_id)
     pairs = set()
     for ids in buckets.values():
-        if 1 < len(ids) <= bucket_cap:
-            ids = sorted(ids)
-            for i, a in enumerate(ids):
-                for b in ids[i + 1:]:
-                    pairs.add((a, b))
+        ids = sorted(ids)
+        if len(ids) <= bucket_cap:
+            pairs |= {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]}
+        else:  # over the cap: the star pairs (min id, x)
+            pairs |= {(ids[0], b) for b in ids[1:]}
     out = []
     for a, b in pairs:
         ham = bin((fps[a] ^ fps[b]) & ((1 << 64) - 1)).count("1")
